@@ -11,8 +11,9 @@ import org.apache.spark.sql.SparkSession
   * So each query is (1) plan-warmed at sf0.001, (2) executed once
   * untimed at the TARGET sf, then (3) timed on a second target-sf
   * pass. The reported per-query number is the warm pass — reproducible
-  * within the run-to-run noise of an isolated BenchOne run. The cold
-  * (first target-sf) pass total is kept as "cold_total" so scan-cache
+  * within the run-to-run noise of an isolated single-query run (the
+  * BenchOne dev main, now in git history). The cold (first
+  * target-sf) pass total is kept as "cold_total" so scan-cache
   * effects stay visible.
   *
   * Also reports one Structured Streaming throughput line
@@ -35,14 +36,15 @@ object Bench {
   private[graft] val DegradedFactor = 1.5
 
   /** Pinned wall-clock of one [[calibrateBandwidth]] reading on the
-    * same healthy close host (median of repeated ProbeCal readings,
-    * committed round 13). Complements the register-only FP kernel:
-    * round 12's official close shipped a 5.5×-inflated fleet lane
-    * with CLEAN FP brackets — the interference stole memory
-    * bandwidth, not cycles, and a dependent-FP chain is by
-    * construction blind to that. The triad streams ~0.8 GB of arrays
-    * (≫ LLC) across all cores, so a co-tenant saturating the memory
-    * bus inflates this reading even when cycles are free.
+    * same healthy close host (median of repeated readings by the
+    * ProbeCal dev main, now in git history; committed round 13).
+    * Complements the register-only FP kernel: round 12's official
+    * close shipped a 5.5×-inflated fleet lane with CLEAN FP brackets —
+    * the interference stole memory bandwidth, not cycles, and a
+    * dependent-FP chain is by construction blind to that. The triad
+    * streams ~0.8 GB of arrays (≫ LLC) across all cores, so a
+    * co-tenant saturating the memory bus inflates this reading even
+    * when cycles are free.
     */
   private[graft] val BwPinnedSec = 0.28
   /** Bandwidth readings spread more than the FP chain run-to-run
@@ -239,6 +241,23 @@ object Bench {
       .map(m => m.group(1) -> m.group(2).toDouble)
       .toMap
 
+  /** `SPARK_GRAFT_CPUS` as an Int, 32 when unset or not a number:
+    * the one value the anchors check and the JSON lines both read. */
+  private[graft] def benchCpus(env: Option[String]): Int =
+    env.flatMap(_.trim.toIntOption).getOrElse(32)
+
+  /** Anchors are wall-clock readings AT A CORE COUNT (the r13 c8
+    * scaling probe flagged p01 lane_suspect against a 32-core anchor),
+    * so they certify a run only when the file's TOP-LEVEL `cpus` equals
+    * the run's. A missing field, a nested `cpus` or non-JSON is a
+    * mismatch.
+    */
+  private[graft] def anchorCpusMatch(anchorsJson: String, cpus: Int): Boolean =
+    try {
+      val v = new com.fasterxml.jackson.databind.ObjectMapper().readTree(anchorsJson).get("cpus")
+      v != null && v.asText.trim.toIntOption.contains(cpus)
+    } catch { case scala.util.control.NonFatal(_) => false }
+
   /** History-anchored sanity check: per-query ratio of `current` to
     * the last committed clean close. Returns (suite median ratio,
     * suspects) where a query is suspect when it runs more than
@@ -381,15 +400,10 @@ object Bench {
       } catch { case scala.util.control.NonFatal(_) => "" }
     val anchorSfMatch = anchorsJson.contains("\"sf\": \"" + sfDir + "\"") ||
       anchorsJson.contains("\"sf\":\"" + sfDir + "\"")
-    // Anchors are wall-clock readings AT A CORE COUNT: the r13 c8 run
-    // (SPARK_GRAFT_CPUS=8 scaling probe) flagged p01 lane_suspect
-    // purely because the anchor was recorded at 32 cores. Anchor
-    // certification only applies when the run's core count matches
-    // the anchors file's; a scaling probe is not a dirty lane.
-    val benchCpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val anchorCpusMatch = """"cpus"\s*:\s*"?([0-9]+)"?""".r
-      .findFirstMatchIn(anchorsJson).map(_.group(1)).forall(_ == benchCpus)
-    val anchorsApply = anchorSfMatch && anchorCpusMatch
+    // a scaling probe at another core count is not a dirty lane
+    val cpus = benchCpus(sys.env.get("SPARK_GRAFT_CPUS"))
+    val cpusMatch = anchorCpusMatch(anchorsJson, cpus)
+    val anchorsApply = anchorSfMatch && cpusMatch
     val queryAnchors =
       if (anchorsApply) parseNumericFields(extractObject(anchorsJson, "queries"))
       else Map.empty[String, Double]
@@ -458,7 +472,7 @@ object Bench {
     val suiteDegraded = dirtyWindows > 0 ||
       streamJson.contains("\"degraded\":true") || scaleJson.contains("\"degraded\":true")
     val anchorsObj =
-      s"""{"sf_match":$anchorSfMatch,"cpus_match":$anchorCpusMatch,""" +
+      s"""{"sf_match":$anchorSfMatch,"cpus_match":$cpusMatch,""" +
         f""""suite_median_ratio":$suiteRatio%.4f,""" +
         s""""suspects":${suspects.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
         s""""anchor_retimed":${anchorRetimed.distinct.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
@@ -527,7 +541,7 @@ object Bench {
         val cand = "{\n \"_source\": \"" + hist + "\",\n" +
           " \"_note\": \"Clean-close anchor candidate; promote by copying over bench/anchors.json.\",\n" +
           " \"sf\": \"" + sfDir + "\",\n" +
-          " \"cpus\": " + benchCpus + ",\n" +
+          " \"cpus\": " + cpus + ",\n" +
           " \"lanes\": {\n" +
           s"""  "single_site_sec": ${sf.getOrElse("single_site_sec", -1.0)},\n""" +
           s"""  "fleet16_sec": ${sf.getOrElse("fleet16_sec", -1.0)},\n""" +
@@ -554,7 +568,7 @@ object Bench {
     // medians); complete per-query detail stays in the full line,
     // bench/last_run.json, and bench/history/.
     val compact = s"""{"metric":"total","value":$total,"unit":"sec",""" +
-      s""""n":${results.size},"failed":$failed,"cpus":$benchCpus,""" +
+      s""""n":${results.size},"failed":$failed,"cpus":$cpus,""" +
       s""""host_degraded":$suiteDegraded,"lane_suspect":$laneSuspect,""" +
       s""""detail":"bench/last_run.json","sf":"$sfDir"}"""
     println(compact)
@@ -656,12 +670,13 @@ object Bench {
       // Stream shuffle partitions sized to the state volume, as any
       // real deploy would: each stream partition carries a state
       // store whose per-batch open/commit cost is fixed, and at this
-      // corpus size 32 stores are machinery, not work — StreamProbe
-      // round 13 measured 1182 docs/s at 32 partitions vs 3340 at 8
-      // with identical results (the r10→r12 "lost throughput" was
-      // exactly this, not the null-band guard or TTL state). The
-      // partition count pins at first checkpoint, so it is set before
-      // the query and restored after.
+      // corpus size 32 stores are machinery, not work — round 13
+      // measured 1182 docs/s at 32 partitions vs 3340 at 8 (the
+      // StreamProbe dev main, now in git history) with identical
+      // results (the r10→r12 "lost throughput" was exactly this, not
+      // the null-band guard or TTL state). The partition count pins at
+      // first checkpoint, so it is set before the query and restored
+      // after.
       spark.conf.set("spark.sql.shuffle.partitions", "8")
       val (sec, rate) =
         try {

@@ -437,8 +437,8 @@ class DataHandler(
     // shuffle, not its post-shuffle IRLS stage) and joined two
     // day-grain aggregates that were never apart — optimization round
     // 13, same-JVM A/B at the 40-bin/288-slot default: 4.6–4.7 →
-    // 3.7–4.1 s warm (ProbeTau). Per-column undilate arithmetic is
-    // bit-identical to the two-pass form.
+    // 3.7–4.1 s warm (ProbeTau, in git history). Per-column undilate
+    // arithmetic is bit-identical to the two-pass form.
     graft.operators.Dilation.undilate2(
         spark,
         fit.select(col("site"), col("day"), col("dil_slot"),

@@ -23,8 +23,8 @@ object GraftSession {
       // session-wide floor taxes EVERY small shuffle with task
       // overhead (measured: +42 s across the bench suite for −2 s on
       // one query). The solver stages that need parallelism despite
-      // tiny bytes pin it explicitly (fixed-partitioner RDD stage in
-      // `analyses.Pipeline.run`), which AQE never re-coalesces.
+      // tiny bytes pin it explicitly through `analyses.SiteLane`, whose
+      // fixed-partitioner RDD stage AQE never re-coalesces.
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
     val spark = b.getOrCreate()

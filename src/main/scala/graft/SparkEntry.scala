@@ -1011,10 +1011,11 @@ object SparkEntry {
     * solver in `flatMapGroups`, and an oracle that replays every IRLS
     * step — pinball weights g/max(|r|, 1e-6), the 1e-9-ridged normal
     * equations, a 3×3 Cramer solve — with a DuckDB RECURSIVE CTE
-    * carrying β across the 30 iterations. The oracle's float
-    * summation order differs from the Scala Cholesky path by design:
-    * the gate pins the SEMANTICS at the IRLS fixed point, where both
-    * engines agree far inside the 6-dp rounding.
+    * carrying β across the 30 iterations. The Scala kernel stops early
+    * once β moves less than 1e-7, and the oracle's float summation
+    * order differs from its Cholesky path by design: the gate pins the
+    * SEMANTICS at the IRLS fixed point, where both engines agree far
+    * inside the 6-dp rounding, not a step-for-step replay.
     */
   private def q72(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -2941,11 +2942,11 @@ object SparkEntry {
     * by the binary-exact signature-agreement estimate (k/64, as
     * calibrated in d10) — so this pipeline never rebuilds shingle
     * tables at all: one scan, one narrow band explode, one equi-join.
-    * Measured (HashBench, sf0.1, 5000 docs): signature build ~2×
-    * faster than the md5-shingle aggregation AND shuffle-free (0.19 s
-    * vs 0.42 s warm); end-to-end vs d07 ~1.2× at the gate's 150-doc
-    * scale, where candidate-join fixed costs dominate — the
-    * per-shingle ratio is what compounds at corpus scale.
+    * Measured (HashBench, in git history; sf0.1, 5000 docs): signature
+    * build ~2× faster than the md5-shingle aggregation AND
+    * shuffle-free (0.19 s vs 0.42 s warm); end-to-end vs d07 ~1.2× at
+    * the gate's 150-doc scale, where candidate-join fixed costs
+    * dominate — the per-shingle ratio is what compounds at corpus scale.
     */
   private def d12(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir).filter(col("doc_id") < 150)
@@ -3774,7 +3775,8 @@ object SparkEntry {
     * budget-bounded) served through the flat IVF path — the
     * billion-vector build shape, property-gated with the e18 recall
     * floor: fleet recall@3 ≥ 25% vs the exact cosine top-3 (observed
-    * 50%/52% at the two gated sfs — `ProbeE23`; chance ≈ 0.9%),
+    * 50%/52% at the two gated sfs — `ProbeE23`, in git history; chance
+    * ≈ 0.9%),
     * exactly k rows, no self-matches.
     */
   private def e23(s: SparkSession, dir: String): DataFrame = {
@@ -3795,7 +3797,7 @@ object SparkEntry {
     * with the same recall-floor idiom as e23: 2 of 4 shards probed,
     * fleet recall@3 ≥ 20% (observed 50%/52% at the gated sfs — on
     * these near-uniform embeddings the 2-shard probe loses nothing vs
-    * the flat scan, `ProbeE23`; chance ≈ 0.9%).
+    * the flat scan, `ProbeE23` in git history; chance ≈ 0.9%).
     */
   private def e24(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir)

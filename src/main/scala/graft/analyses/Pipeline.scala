@@ -74,6 +74,14 @@ case class SiteReport(
   */
 object Pipeline {
 
+  /** The solver lane's sort: site, then day. */
+  private implicit val dayRowOrdering: Ordering[DayRow] = new Ordering[DayRow] {
+    override def compare(a: DayRow, b: DayRow): Int = {
+      val c = java.lang.Long.compare(a.site, b.site)
+      if (c != 0) c else java.lang.Double.compare(a.dayIdx, b.dayIdx)
+    }
+  }
+
   /** Build the DayStats fact table for a long (site, ts, value)
     * input. Single aggregation pass + one broadcast join for the
     * per-site capacity.
@@ -205,54 +213,14 @@ object Pipeline {
   ): Dataset[SiteReport] = {
     import spark.implicits._
     val rows = dayRows(df, site, tsCol, valueCol)
-    // The solver stage is CPU-dense on byte-tiny groups (a few KB of
-    // day stats per site carry an IRLS/DP/DBSCAN workload), so the
-    // relational planner must NOT own its parallelism: a
-    // `repartition(par, site)` here is removed by the optimizer as
-    // redundant against the first_day window's existing
-    // hashpartitioning(site), and AQE then coalesces that byte-tiny
-    // ENSURE_REQUIREMENTS exchange to ONE partition — measured round
-    // 13: 1500 sites solved serially, p01 4.8 s → 33 s. The explicit
-    // RDD boundary with a fixed HashPartitioner is immune to both
-    // rules by construction: partitions == defaultParallelism, which
-    // AQE never re-plans, and each task groups its sites locally.
-    val par = spark.sparkContext.defaultParallelism
-    // repartitionAndSortWithinPartitions on (site, dayIdx): sites are
-    // hash-partitioned, rows arrive site-grouped and day-ordered, and
-    // the task streams ONE site's days at a time — per-task memory is
-    // O(days-of-one-site), not O(sites-per-partition) as a
-    // whole-partition toArray.groupBy would be. The shuffled value is
-    // the flat primitive-field DayRow (one object + one key pair per
-    // day row at the RDD surface, vs. the generic Tuple9's 12 with
-    // every field boxed — see the case-class note above).
-    val solved = rows
       .select(col("site"), col("day_idx").as("dayIdx"), col("energy"),
         col("density"), col("daily_max").as("dailyMax"),
         col("com_hour").as("comHour"), col("n_obs").as("nObs"),
         col("capacity"), col("smoothness"))
       .as[DayRow]
-      .rdd
-      .map(r => ((r.site, r.dayIdx), r))
-      .repartitionAndSortWithinPartitions(new org.apache.spark.Partitioner {
-        override def numPartitions: Int = par
-        override def getPartition(key: Any): Int = {
-          val h = key.asInstanceOf[(Long, Double)]._1.hashCode
-          ((h % par) + par) % par
-        }
-      })
-      .mapPartitions { it =>
-        val rowsIt = it.map(_._2).buffered
-        new Iterator[SiteReport] {
-          override def hasNext: Boolean = rowsIt.hasNext
-          override def next(): SiteReport = {
-            val siteId = rowsIt.head.site
-            val buf = scala.collection.mutable.ArrayBuffer.empty[DayRow]
-            while (rowsIt.hasNext && rowsIt.head.site == siteId) buf += rowsIt.next()
-            // already day-ordered by the sort
-            analyzeSite(siteId, buf.toArray, period, faultInjector(siteId, _))
-          }
-        }
-      }
+    val solved = SiteLane(rows, (r: DayRow) => r.site) { (siteId, days) =>
+      Iterator.single(analyzeSite(siteId, days.toArray, period, faultInjector(siteId, _)))
+    }
     spark.createDataset(solved)
   }
 

@@ -269,7 +269,8 @@ object Profiler {
     // max(v)/cap ≡ max(v/cap) for the per-site constant cap (division
     // by a positive constant is monotone and the maximizing row is the
     // same row; NaN/null rows flow identically through both forms) —
-    // ProbeCells full-join parity: 0 mismatches, q63/q66 oracle green.
+    // ProbeCells (in git history) full-join parity: 0 mismatches,
+    // q63/q66 oracle green.
     //
     // MEASURED (round 7, sf0.1 filled-matrix path): an .rdd persist
     // of the rise/set table, despite removing a duplicate scan-grain

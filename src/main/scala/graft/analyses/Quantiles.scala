@@ -66,12 +66,40 @@ object Quantiles {
       val y: Array[Double]
   )
 
-  /** The shared solver-lane scaffold (CPU-dense per-site stage): pin
-    * parallelism with a fixed HashPartitioner RDD shuffle (AQE would
-    * coalesce a Dataset groupByKey by byte size; see
-    * analyses.Pipeline.run), sites hash-partitioned with (day, slot)
-    * secondary sort so the task streams ONE site at a time — memory
-    * O(one site's grid), not O(sites-per-partition).
+  /** Streams one site's sorted rows into a [[SiteBlock]]: days in
+    * first-seen (= chronological) order, and CALENDAR day offsets,
+    * not observed-day ranks — a data gap must advance the
+    * yearly-period phase, or every post-gap day evaluates the
+    * seasonal basis out of phase.
+    */
+  private def siteBlock(siteId: Long, rows: Iterator[DilRow], nBins: Int): SiteBlock = {
+    val days = scala.collection.mutable.ArrayBuffer.empty[String]
+    val dayIdx = new scala.collection.mutable.ArrayBuilder.ofInt
+    val slots = new scala.collection.mutable.ArrayBuilder.ofInt
+    val t = new scala.collection.mutable.ArrayBuilder.ofDouble
+    val y = new scala.collection.mutable.ArrayBuilder.ofDouble
+    var curDay: String = null
+    var day0 = 0L
+    var curOff = 0.0
+    while (rows.hasNext) {
+      val r = rows.next()
+      if (r.day != curDay) {
+        curDay = r.day
+        val ep = java.time.LocalDate.parse(r.day).toEpochDay
+        if (days.isEmpty) day0 = ep
+        curOff = (ep - day0).toDouble
+        days += r.day
+      }
+      dayIdx += days.length - 1
+      slots += r.dilSlot
+      t += curOff * nBins.toDouble + r.dilSlot
+      y += r.dilValue
+    }
+    new SiteBlock(siteId, days.toArray, dayIdx.result(), slots.result(), t.result(), y.result())
+  }
+
+  /** The dilated-grain [[SiteLane]]: (day, slot) secondary sort, one
+    * [[SiteBlock]] per site.
     */
   private def solverLane[T: Encoder: scala.reflect.ClassTag](
       spark: SparkSession,
@@ -85,53 +113,9 @@ object Quantiles {
         col("dil_slot").cast("int").as("dilSlot"), col("dil_value").cast("double").as("dilValue")
       )
       .as[DilRow]
-    val par = spark.sparkContext.defaultParallelism
-    val solved = rows.rdd
-      .map(r => (r, ()))
-      .repartitionAndSortWithinPartitions(new org.apache.spark.Partitioner {
-        override def numPartitions: Int = par
-        override def getPartition(key: Any): Int = {
-          val h = key.asInstanceOf[DilRow].site.hashCode
-          ((h % par) + par) % par
-        }
-      })
-      .mapPartitions { part =>
-        val rowsIt = part.map(_._1).buffered
-        new Iterator[SiteBlock] {
-          override def hasNext: Boolean = rowsIt.hasNext
-          override def next(): SiteBlock = {
-            val siteId = rowsIt.head.site
-            val days = scala.collection.mutable.ArrayBuffer.empty[String]
-            val dayIdx = new scala.collection.mutable.ArrayBuilder.ofInt
-            val slots = new scala.collection.mutable.ArrayBuilder.ofInt
-            val t = new scala.collection.mutable.ArrayBuilder.ofDouble
-            val y = new scala.collection.mutable.ArrayBuilder.ofDouble
-            var curDay: String = null
-            var day0 = 0L
-            var curOff = 0.0
-            while (rowsIt.hasNext && rowsIt.head.site == siteId) {
-              val r = rowsIt.next()
-              if (r.day != curDay) {
-                // days arrive grouped by the secondary sort; CALENDAR
-                // day offsets, not observed-day ranks: a data gap must
-                // advance the yearly-period phase, or every post-gap
-                // day evaluates the seasonal basis out of phase
-                curDay = r.day
-                val ep = java.time.LocalDate.parse(r.day).toEpochDay
-                if (days.isEmpty) day0 = ep
-                curOff = (ep - day0).toDouble
-                days += r.day
-              }
-              dayIdx += days.length - 1
-              slots += r.dilSlot
-              t += curOff * nBins.toDouble + r.dilSlot
-              y += r.dilValue
-            }
-            new SiteBlock(siteId, days.toArray, dayIdx.result(), slots.result(),
-              t.result(), y.result())
-          }
-        }.flatMap(solve)
-      }
+    val solved = SiteLane(rows, (r: DilRow) => r.site) { (siteId, it) =>
+      solve(siteBlock(siteId, it, nBins))
+    }
     spark.createDataset(solved).toDF()
   }
 
@@ -188,10 +172,10 @@ object Quantiles {
     * through FINITENESS and grain, never through its bits). Fitting
     * only the requested tau skips ~2/3 of the IRLS work and the
     * Viterbi pass (optimization round 13; same-JVM interleaved A/B at
-    * sf0.1/40 bins: 2.9–3.1 s → 2.2–2.3 s warm, ProbeTau). The
-    * fitted values differ from the 3-tau path in the IRLS convergence
-    * tail only when IRLS converges inside the iteration cap (the
-    * 3-tau path warm-starts each tau from the previous one's
+    * sf0.1/40 bins: 2.9–3.1 s → 2.2–2.3 s warm, ProbeTau in git
+    * history). The fitted values differ from the 3-tau path in the IRLS
+    * convergence tail only when IRLS converges inside the iteration cap
+    * (the 3-tau path warm-starts each tau from the previous one's
     * coefficients, the single-tau path cold-starts from the LS fit —
     * both reach the same 1e-7 coefficient fixed point when they
     * converge; a cap-limited fit can differ beyond the tail);

@@ -27,8 +27,7 @@ import graft.solvers.Kernels
   *    grid size, and the only shuffle is the (site, day) groupBy.
   *  - '''Stage B''' ([[estimates]]) runs the per-site optimizer on
   *    bounded day-grain state (|days| × 2|grid| doubles per site)
-  *    fleet-parallel, with the same fixed-HashPartitioner streaming
-  *    idiom as [[Pipeline.run]].
+  *    fleet-parallel through the per-site [[SiteLane]].
   *  - '''Stage C''' ([[sunupMask]]) broadcasts the day-grain
   *    estimates back to the scan — no scan shuffle.
   *
@@ -37,6 +36,12 @@ import graft.solvers.Kernels
   * reproducible across engines and runs).
   */
 object SunriseSunset {
+
+  /** (site, day, sr_arr, ss_arr): one site-day of [[roughGrid]]. */
+  private type GridRow = (Long, String, Seq[Double], Seq[Double])
+
+  /** The solver lane's sort: site, then day (ISO dates order as strings). */
+  private implicit val gridRowOrdering: Ordering[GridRow] = Ordering.by(r => (r._1, r._2))
 
   /** `np.logspace(-5, -1, searchPts)` (`sunrise_sunset_estimation.py:199`). */
   def thresholdGrid(searchPts: Int = 21): Array[Double] =
@@ -222,45 +227,22 @@ object SunriseSunset {
         transform(col("sr_arr"), x => coalesce(x, nan)).as("sr_arr"),
         transform(col("ss_arr"), x => coalesce(x, nan)).as("ss_arr")
       )
-      .as[(Long, String, Seq[Double], Seq[Double])]
-    // CPU-dense per-site solver stage: fixed HashPartitioner + day
-    // secondary sort, streaming one site at a time (see Pipeline.run)
-    val par = spark.sparkContext.defaultParallelism
-    val solved = grid.rdd
-      .map(r => ((r._1, r._2), r))
-      .repartitionAndSortWithinPartitions(new org.apache.spark.Partitioner {
-        override def numPartitions: Int = par
-        override def getPartition(key: Any): Int = {
-          val h = key.asInstanceOf[(Long, String)]._1.hashCode
-          ((h % par) + par) % par
-        }
-      })
-      .mapPartitions { part =>
-        val rowsIt = part.map(_._2).buffered
-        new Iterator[Array[(Long, String, Seq[Double], Seq[Double])]] {
-          override def hasNext: Boolean = rowsIt.hasNext
-          override def next(): Array[(Long, String, Seq[Double], Seq[Double])] = {
-            val siteId = rowsIt.head._1
-            val buf = scala.collection.mutable.ArrayBuffer
-              .empty[(Long, String, Seq[Double], Seq[Double])]
-            while (rowsIt.hasNext && rowsIt.head._1 == siteId) buf += rowsIt.next()
-            buf.toArray
-          }
-        }.flatMap { days =>
-          val siteId = days(0)._1
-          val n = days.length
-          // CALENDAR offsets keep the periodic phase honest across gaps
-          val ep0 = java.time.LocalDate.parse(days(0)._2).toEpochDay
-          val t = days.map(d => (java.time.LocalDate.parse(d._2).toEpochDay - ep0).toDouble)
-          val srGrid = Array.tabulate(ths.length, n)((k, d) => days(d)._3(k))
-          val ssGrid = Array.tabulate(ths.length, n)((k, d) => days(d)._4(k))
-          val fit = optimizeSite(srGrid, ssGrid, t, ths, period, harmonics)
-          (0 until n).iterator.map { d =>
-            (siteId, days(d)._2, fit.thIdx, fit.threshold, fit.hoErr, fit.plausible,
-              fit.srRough(d), fit.ssRough(d), fit.srEst(d), fit.ssEst(d))
-          }
-        }
+      .as[GridRow]
+    // the CPU-dense per-site optimizer, one site at a time, days in order
+    val solved = SiteLane(grid, (r: GridRow) => r._1) { (siteId, it) =>
+      val days = it.toArray
+      val n = days.length
+      // CALENDAR offsets keep the periodic phase honest across gaps
+      val ep0 = java.time.LocalDate.parse(days(0)._2).toEpochDay
+      val t = days.map(d => (java.time.LocalDate.parse(d._2).toEpochDay - ep0).toDouble)
+      val srGrid = Array.tabulate(ths.length, n)((k, d) => days(d)._3(k))
+      val ssGrid = Array.tabulate(ths.length, n)((k, d) => days(d)._4(k))
+      val fit = optimizeSite(srGrid, ssGrid, t, ths, period, harmonics)
+      (0 until n).iterator.map { d =>
+        (siteId, days(d)._2, fit.thIdx, fit.threshold, fit.hoErr, fit.plausible,
+          fit.srRough(d), fit.ssRough(d), fit.srEst(d), fit.ssEst(d))
       }
+    }
     spark.createDataset(solved)
       .toDF(site, "day", "th_idx", "threshold", "ho_err", "plausible",
         "sunrise_rough", "sunset_rough", "sunrise_est", "sunset_est")

@@ -214,7 +214,8 @@ object Dilation {
     * solver lane's shuffle, not its post-shuffle IRLS stage) and pay a
     * (site, day) join to re-align what was never apart — measured
     * optimization round 13 (same-JVM interleaved A/B at sf0.1,
-    * 40 bins → 288 slots, ProbeTau): 4.6–4.7 s → 3.7–4.1 s warm.
+    * 40 bins → 288 slots, ProbeTau in git history): 4.6–4.7 s →
+    * 3.7–4.1 s warm.
     */
   def undilate2(
       spark: SparkSession,

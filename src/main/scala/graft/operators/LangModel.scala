@@ -313,6 +313,10 @@ object LangModel {
     * the running long sum (k ≤ a few hundred, so the O(k²) prefix is
     * microseconds).
     *
+    * @param topK CONTRACT: small, at most a few hundred. All k rows are
+    *   packed into ONE array in ONE task, and the prefix sum re-reads
+    *   a slice per row, so the work grows as k² with no warning. For a
+    *   large vocabulary cut, rank with a window over `counts` instead.
     * @return (rk, w, cnt, coverage, n_types)
     */
   def vocabFromCounts(counts: DataFrame, topK: Int): DataFrame = {
@@ -333,7 +337,7 @@ object LangModel {
   }
 
   /** [[vocabFromCounts]] from the documents themselves (whitespace
-    * tokens — the d16 batch query).
+    * tokens — the d16 batch query), under its small-`topK` contract.
     */
   def vocabStats(docs: DataFrame, textCol: String, topK: Int): DataFrame =
     vocabFromCounts(

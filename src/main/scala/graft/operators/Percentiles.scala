@@ -11,12 +11,12 @@ import org.apache.spark.sql.DataFrame
   * OpenHashMap[value → count] of every DISTINCT value in the group.
   * On a 25M-row fleet of mostly-distinct doubles that map build +
   * merge measured 5.5–9.9 s of the 100 TB pipeline's fleet16 headline
-  * (ProbePS, round 11) and its GC churn was the dominant run-to-run
-  * variance. This form shuffles each row once (group key + value),
-  * sorts within site, and selects the two order statistics the
-  * interpolation needs — every operator except the Window is
-  * whole-stage codegen, state is spill-able, and there is no
-  * driver-side or map-merge step.
+  * (round 11, the ProbePS dev main, now in git history) and its GC
+  * churn was the dominant run-to-run variance. This form shuffles
+  * each row once (group key + value), sorts within site, and selects
+  * the two order statistics the interpolation needs — every operator
+  * except the Window is whole-stage codegen, state is spill-able, and
+  * there is no driver-side or map-merge step.
   *
   * Bit parity: reproduces `Percentile.getPercentile` (Spark
   * `sql/catalyst/expressions/aggregate/Percentile.scala`) exactly —

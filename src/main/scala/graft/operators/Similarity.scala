@@ -256,37 +256,42 @@ object Similarity {
     val vp = if (iters >= 1)
       v0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     else v0
-    val v = vp
-    var cents: Array[(Long, Array[Double])] = v
-      .orderBy(md5(col(idCol).cast("string")), col(idCol)).limit(k)
-      .collect()
-      .zipWithIndex
-      .map { case (r, i) => i.toLong -> r.getSeq[Double](1).toArray }
+    // training is driver-complete when the try ends; the cached
+    // projection has no further consumer (the returned frame is built
+    // from `cents`), and a failed pass must not leak it either
+    val cents =
+      try {
+        var cur: Array[(Long, Array[Double])] = vp
+          .orderBy(md5(col(idCol).cast("string")), col(idCol)).limit(k)
+          .collect()
+          .zipWithIndex
+          .map { case (r, i) => i.toLong -> r.getSeq[Double](1).toArray }
 
-    var it = 0
-    while (it < iters) {
-      val updated = v
-        .select(centroidArgminExpr(col("vv"), cents).as("cid"), col("vv"))
-        .as[(Long, Seq[Double])]
-        .rdd
-        .map { case (cid, vv) => cid -> (vv.toArray, 1L) }
-        .reduceByKey { (a, b) =>
-          val s = a._1.clone()
-          var i = 0
-          while (i < s.length && i < b._1.length) { s(i) += b._1(i); i += 1 }
-          (s, a._2 + b._2)
+        var it = 0
+        while (it < iters) {
+          val updated = vp
+            .select(centroidArgminExpr(col("vv"), cur).as("cid"), col("vv"))
+            .as[(Long, Seq[Double])]
+            .rdd
+            .map { case (cid, vv) => cid -> (vv.toArray, 1L) }
+            .reduceByKey { (a, b) =>
+              val s = a._1.clone()
+              var i = 0
+              while (i < s.length && i < b._1.length) { s(i) += b._1(i); i += 1 }
+              (s, a._2 + b._2)
+            }
+            .mapValues { case (sum, n) => sum.map(_ / n) }
+            .collect()
+            .sortBy(_._1)
+          // a cluster that lost every member keeps its previous centroid
+          val byId = updated.toMap
+          cur = cur.map { case (cid, old) => cid -> byId.getOrElse(cid, old) }
+          it += 1
         }
-        .mapValues { case (sum, n) => sum.map(_ / n) }
-        .collect()
-        .sortBy(_._1)
-      // a cluster that lost every member keeps its previous centroid
-      val byId = updated.toMap
-      cents = cents.map { case (cid, old) => cid -> byId.getOrElse(cid, old) }
-      it += 1
-    }
-    // training is driver-complete here; the cached projection has no
-    // further consumer (the returned frame is built from `cents`)
-    if (iters >= 1) vp.unpersist(blocking = false)
+        cur
+      } finally {
+        if (iters >= 1) vp.unpersist(blocking = false)
+      }
     val out = cents.toSeq.map { case (cid, cv) => (cid, cv.toSeq) }
     vectors.sparkSession.createDataset(out).toDF("centroid_id", "centroid")
       .select(col("centroid_id"), col("centroid").cast("array<double>"))

@@ -65,11 +65,14 @@ object Kernels {
       // same criterion quantileFourierFitMultiTaus has carried since
       // round 13 (optimization round 14 brings this single-tau kernel
       // in line): a converged IRLS re-solves the identical weighted
-      // system, so the remaining iterations were pure waste. This
-      // kernel backs the SunriseSunset threshold optimizer (21
-      // thresholds x 2 curves per site = 44 fits), which no declared
-      // query consumes (q55 gates stage A only) — it is spec-gated
-      // with ~10x tolerance margins.
+      // system, so the remaining iterations were pure waste. Its
+      // consumers: q72 (hash-gated on literal series; its DuckDB
+      // oracle runs all 30 IRLS steps, so the gate holds because both
+      // sides reach the same fixed point inside the 6-dp rounding,
+      // not because the steps replay one for one), p01 through
+      // Pipeline.analyzeSite (hash-gated quality, clear-day and
+      // capacity fits), and the SunriseSunset threshold optimizer (44
+      // fits per site, spec-gated with ~10x tolerance margins).
       var d = 0.0
       var a = 0
       while (a < p) {

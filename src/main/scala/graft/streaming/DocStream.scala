@@ -356,7 +356,8 @@ object DocStream {
     * tick (overwrite, not append: like the mixture weights, the table
     * is a VIEW of the corpus so far). After any tick the snapshot
     * equals the batch `vocabStats` of everything ingested —
-    * `DocStreamSpec`-asserted across a checkpointed restart.
+    * `DocStreamSpec`-asserted across a checkpointed restart. `topK`
+    * keeps `vocabFromCounts`' small-k contract.
     */
   def incrementalVocab(
       spark: SparkSession,

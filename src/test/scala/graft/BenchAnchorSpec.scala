@@ -92,6 +92,25 @@ class BenchAnchorSpec extends AnyFunSuite {
     assert(out.contains("\"attempts\":1") && out.contains("\"degraded\":false"))
   }
 
+  test("core count: parsed once to Int; anchors certify only at their top-level cpus") {
+    assert(Bench.benchCpus(None) == 32)
+    assert(Bench.benchCpus(Some(" 08")) == 8)
+    assert(Bench.benchCpus(Some("auto")) == 32, "a non-number must not reach the JSON lines")
+
+    val at32 = """{"sf": "/x/sf0.1", "cpus": 32, "lanes": {"fleet16_sec": 5.7}}"""
+    assert(Bench.anchorCpusMatch(at32, 32))
+    assert(!Bench.anchorCpusMatch(at32, 8))
+    assert(Bench.anchorCpusMatch("""{"cpus": "8", "queries": {}}""", 8))
+    // a legacy file without the field no longer certifies every core count
+    val legacy = """{"sf": "/x/sf0.1", "queries": {"p01": 4.8}}"""
+    assert(!Bench.anchorCpusMatch(legacy, 32))
+    // only the top-level field counts, wherever a nested one appears
+    val nested = """{"sf": "/x/sf0.1", "lanes": {"cpus": 32}, "cpus": 8}"""
+    assert(!Bench.anchorCpusMatch(nested, 32) && Bench.anchorCpusMatch(nested, 8))
+    assert(!Bench.anchorCpusMatch("""{"lanes": {"cpus": 32}}""", 32))
+    assert(!Bench.anchorCpusMatch("", 32))
+  }
+
   test("committed anchors file parses and matches the close shape") {
     val p = java.nio.file.Paths.get("bench/anchors.json")
     assume(java.nio.file.Files.exists(p))

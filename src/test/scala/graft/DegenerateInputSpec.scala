@@ -127,6 +127,20 @@ class DegenerateInputSpec extends AnyFunSuite {
     assert(sil.length == 3 && sil.forall(r => r.isNullAt(3) && r.isNullAt(4)))
   }
 
+  test("k-means training that throws leaves its projection uncached") {
+    // the seed collect is the first pass to evaluate the projection,
+    // so a bad vector fails training after the persist (a range, not a
+    // local Seq: the optimizer would evaluate a local relation's
+    // projection before the persist)
+    val vecs = spark.range(1, 4).select(
+      col("id").as("vec_id"),
+      when(col("id") === 3L, raise_error(lit("bad vector")))
+        .otherwise(array(col("id").cast("double"), lit(1.0))).as("embedding"))
+    intercept[Exception](Similarity.kmeansFit(vecs, "vec_id", "embedding", k = 2, iters = 2))
+    val projection = vecs.select(col("vec_id"), col("embedding").cast("array<double>").as("vv"))
+    assert(projection.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+  }
+
   test("solver kernels on tiny arrays return without throwing") {
     // below the design-matrix rank → all-NaN, length preserved
     val f1 = Kernels.quantileFourierFit(Array(1.0), Array(0.0), tau = 0.5, harmonics = 2, period = 7.0)

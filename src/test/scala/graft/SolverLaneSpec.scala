@@ -4,13 +4,13 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.analyses.{Profiler, Quantiles}
+import graft.analyses.{Profiler, Quantiles, SiteLane}
 import graft.operators.DayStats
 import graft.solvers.Kernels
 
-/** Focused pins for the round-14 operator-interior rewrites: the
-  * DilRow primitive solver lane (Quantiles) and the fused two-pass
-  * orientationCells derivation (Profiler). Each asserts the rewritten
+/** Focused pins for the per-site solver lane ([[SiteLane]] and its
+  * DilRow use in Quantiles) and the fused two-pass orientationCells
+  * derivation (Profiler). Each asserts the rewritten
   * interior against an INDEPENDENT derivation of the same contract —
   * kernel ground truth for the lane, hand aggregation for the cells —
   * so a drift in the streaming/fusion plumbing fails here, not at the
@@ -62,6 +62,44 @@ class SolverLaneSpec extends AnyFunSuite {
           s"site $site day $d slot $s: lane $f vs kernel ${exp((d, s))}")
       }
     }
+  }
+
+  test("SiteLane: negative ids, more sites than partitions, each site solved once in order") {
+    // 4 partitions, 15 sites including negative and beyond-Int ids
+    val sites = (-7L to 6L) :+ -5000000000L
+    val rows = scala.util.Random.shuffle(for (s <- sites; k <- 0 until 5) yield (s, k))
+    val solved = SiteLane(rows.toDS(), (r: (Long, Int)) => r._1) { (site, it) =>
+      Iterator.single(site -> it.toVector)
+    }.collect()
+    assert(solved.map(_._1).sorted.toSeq == sites.sorted, "each site exactly once")
+    solved.foreach { case (site, got) =>
+      assert(got == (0 until 5).map(site -> _), s"site $site: rows $got")
+    }
+  }
+
+  test("SiteLane: rows a solve leaves unread never reach the next site") {
+    val rows = scala.util.Random.shuffle(for (s <- 1L to 9L; k <- 0 until 4) yield (s, k))
+    val firsts = SiteLane(rows.toDS(), (r: (Long, Int)) => r._1) { (site, it) =>
+      Iterator.single(site -> it.next()._2)
+    }.collect()
+    assert(firsts.sortBy(_._1).toSeq == (1L to 9L).map(_ -> 0))
+    // a lazy solve pulls its rows only as its output is consumed
+    val pulled = SiteLane(rows.toDS(), (r: (Long, Int)) => r._1) { (site, it) =>
+      it.map(r => site -> r)
+    }.collect()
+    assert(pulled.length == rows.length && pulled.forall { case (site, r) => r._1 == site })
+  }
+
+  test("SiteLane: byte-tiny input still gets defaultParallelism partitions, placed by site hash") {
+    // AQE would coalesce a Dataset shuffle of a few bytes to ONE
+    // partition; the lane's fixed partitioner must not be re-planned
+    val par = spark.sparkContext.defaultParallelism
+    val lane = SiteLane(Seq((1L, 0), (2L, 0), (-3L, 0)).toDS(), (r: (Long, Int)) => r._1) {
+      (site, _) => Iterator.single(site)
+    }
+    assert(lane.getNumPartitions == par)
+    val placed = lane.mapPartitionsWithIndex((i, it) => it.map(_ -> i)).collect()
+    placed.foreach { case (site, i) => assert(i == ((site.hashCode % par) + par) % par, s"site $site") }
   }
 
   test("fused orientationCells: cells = max(v)/p99 and rise/set re-aggregate exactly") {
