@@ -67,10 +67,10 @@ case class SiteReport(
   *  - stages 1–2 (standardize, day stats) are one relational plan over
   *    all sites at once — aggregation with map-side combine, shuffle
   *    volume O(sites × days);
-  *  - solver stages run fleet-parallel via `groupByKey(site)
-  *    .mapGroups` — the Dask per-site task graph
-  *    (`runner.py:177-194`) becomes Spark partition-parallelism, one
-  *    job for the whole fleet.
+  *  - solver stages run fleet-parallel in one [[SiteLane]] (a fixed
+  *    site partitioner, sorted by site then day) — the Dask per-site
+  *    task graph (`runner.py:177-194`) becomes Spark
+  *    partition-parallelism, one job for the whole fleet.
   */
 object Pipeline {
 
@@ -82,10 +82,6 @@ object Pipeline {
     }
   }
 
-  /** Build the DayStats fact table for a long (site, ts, value)
-    * input. Single aggregation pass + one broadcast join for the
-    * per-site capacity.
-    */
   /** The day-grain aggregate list both [[dayStats]] and [[dayRows]]
     * emit — one definition so the two frames cannot drift.
     */
@@ -101,6 +97,10 @@ object Pipeline {
     )
   }
 
+  /** Build the DayStats fact table for a long (site, ts, value)
+    * input. Single aggregation pass + one [[SideJoin]] (broadcast by
+    * default) of the per-site capacity.
+    */
   def dayStats(df: DataFrame, site: String, tsCol: String, valueCol: String): DataFrame = {
     // null rows carry no signal and would (a) bias energy low — the
     // mean-power×24 divides by the ALL-row count — and (b) let an
@@ -191,8 +191,7 @@ object Pipeline {
     *   `signal_decompositions.py:45-185`) once a site spans ≥ ~18
     *   months, weekly below that — short fixtures can't identify an
     *   annual harmonic, multi-year sites alias under a weekly one.
-    */
-  /** @param faultInjector chaos-testing seam (the reference's per-site
+    * @param faultInjector chaos-testing seam (the reference's per-site
     *   error-channel contract, `sdt_dask/dask_tool/runner.py:54-60`):
     *   invoked as (siteId, stageName) at every solver-stage entry
     *   inside the executor task; a throw is routed into that site's

@@ -2,8 +2,9 @@ package graft.solvers
 
 /** Small per-site model-selection kernels (SURVEY §2.9): DBSCAN on
   * day-score pairs, Huber IRLS regression, Gauss–Newton curve fit.
-  * All O(num_days²) or better on bounded per-site state inside
-  * `mapGroups` — never on the raw grain.
+  * All O(num_days²) or better on bounded per-site state inside a
+  * per-site lane (`analyses.SiteLane` or a `mapGroups`) — never on the
+  * raw grain.
   */
 object Cluster {
 

@@ -2,8 +2,9 @@ package graft.solvers
 
 /** Small dense / banded linear algebra for the per-site solver
   * kernels (SURVEY §2.8). Everything here operates on bounded
-  * per-site state (vectors of length ≈ num-days), runs inside
-  * `mapGroups` on executors, and has no native dependencies.
+  * per-site state (vectors of length ≈ num-days), runs on executors
+  * inside a per-site lane (`analyses.SiteLane` or a `mapGroups`), and
+  * has no native dependencies.
   */
 object Linalg {
 
