@@ -64,6 +64,7 @@ object Verify {
       // the study-gate family (q50/q64/q65/q66/q88/q89) shares one
       // persisted filled-grid build instead of six identical rebuilds
       .config("spark.graft.filledGrid.cache", "true")
+      .config(GraftSession.staticConfs.toMap)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

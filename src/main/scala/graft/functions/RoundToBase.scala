@@ -143,6 +143,11 @@ object GraftFunctions {
       buildDoubleOrderBits,
       "built-in"
     )
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+      "graft_winnow_mins",
+      buildWinnowMins,
+      "built-in"
+    )
   }
 
   def buildDoubleOrderBits(exprs: Seq[Expression]): Expression =
@@ -184,6 +189,12 @@ object GraftFunctions {
 
   def buildRollingMinhashSig(exprs: Seq[Expression]): Expression =
     RollingMinhashSig(
+      Cast(exprs(0), org.apache.spark.sql.types.StringType),
+      Cast(exprs(1), org.apache.spark.sql.types.IntegerType),
+      Cast(exprs(2), org.apache.spark.sql.types.IntegerType))
+
+  def buildWinnowMins(exprs: Seq[Expression]): Expression =
+    WinnowMins(
       Cast(exprs(0), org.apache.spark.sql.types.StringType),
       Cast(exprs(1), org.apache.spark.sql.types.IntegerType),
       Cast(exprs(2), org.apache.spark.sql.types.IntegerType))
@@ -271,6 +282,12 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
         new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
           classOf[DoubleOrderBits].getName, "graft_double_order_bits"),
         (exprs: Seq[Expression]) => GraftFunctions.buildDoubleOrderBits(exprs))
+    )
+    e.injectFunction(
+      (org.apache.spark.sql.catalyst.FunctionIdentifier("graft_winnow_mins"),
+        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
+          classOf[WinnowMins].getName, "graft_winnow_mins"),
+        (exprs: Seq[Expression]) => GraftFunctions.buildWinnowMins(exprs))
     )
     // nearest-ts range joins written naively become bucketed equi-joins
     e.injectOptimizerRule(_ => graft.plans.RangeJoinRule)

@@ -534,32 +534,26 @@ object Dedup {
 
   /** [[winnowFingerprints]] as ONE scalar column: the per-document
     * fingerprint array `array<struct<fp_pos:int, fp_hash:bigint>>`
-    * computed entirely inside a row expression (k-gram key array →
-    * per-window `array_min` over slices → distinct decode). Value-
+    * computed entirely inside a row expression (the native
+    * `graft_winnow_mins` window minimums → distinct decode). Value-
     * identical to the window-aggregate form — `WinnowSpec` asserts
     * it — and the shape a STREAMING query needs: the fingerprints
     * arrive at the (single permitted) stateful operator already
-    * formed. Batch callers should prefer [[winnowFingerprints]],
-    * whose frame-bounded window min does O(n) comparator work per
-    * document versus this form's O(n·w).
+    * formed. Null text yields an empty array. Per document the work
+    * is one md5 per k-gram plus O(n·w) comparisons
+    * ([[graft.functions.WinnowMins]]).
     */
   def winnowFpArray(text: Column, k: Int, w: Int): Column = {
     require(k >= 1 && w >= 1, s"k and w must be positive, got k=$k w=$w")
+    graft.functions.GraftFunctions.ensure()
     val norm = regexp_replace(lower(text), "[^a-z0-9]", "")
-    val n = least(length(norm) - (k - 1), lit(65535))
-    val keys = transform(
-      sequence(lit(1), n),
-      pos => conv(substring(md5(norm.substr(pos, lit(k))), 1, 11), 16, 10).cast("long") * 65536L
-        + (lit(65535L) - pos)
-    )
-    val sels = transform(sequence(lit(1), n - (w - 1)), i => array_min(slice(keys, i, lit(w))))
-    when(
-      n >= w,
-      array_distinct(transform(sels, m => struct(
+    val mins = call_function("graft_winnow_mins", norm, lit(k), lit(w))
+    coalesce(
+      array_distinct(transform(mins, m => struct(
         (lit(65535L) - m % 65536L).cast("int").as("fp_pos"),
         shiftright(m, 16).as("fp_hash")
-      )))
-    ).otherwise(array().cast("array<struct<fp_pos:int,fp_hash:bigint>>"))
+      ))),
+      array().cast("array<struct<fp_pos:int,fp_hash:bigint>>"))
   }
 
   /** Winnowing near-dup pairs: join the per-doc fingerprint SETS on

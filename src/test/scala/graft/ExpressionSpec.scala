@@ -257,4 +257,40 @@ class ExpressionSpec extends AnyFunSuite {
       .filter(col("b").isNotNull).count()
     assert(bands == 4, "exactly the non-null doc's 4 bands must survive")
   }
+
+  test("graft_winnow_mins equals the key-array composition it replaced, bit-for-bit") {
+    GraftFunctions.register(spark)
+    // the composition the native replaced (frozen as reference
+    // semantics): one packed md5 key per k-gram, then each window's
+    // array_min over a slice of the key array
+    def treeMins(norm: org.apache.spark.sql.Column, k: Int, w: Int) = {
+      val n = least(length(norm) - (k - 1), lit(65535))
+      val keys = transform(
+        sequence(lit(1), n),
+        pos => conv(substring(md5(norm.substr(pos, lit(k))), 1, 11), 16, 10).cast("long") * 65536L
+          + (lit(65535L) - pos))
+      when(n >= w, transform(sequence(lit(1), n - (w - 1)), i => array_min(slice(keys, i, lit(w)))))
+        .otherwise(array().cast("array<bigint>"))
+    }
+    val edges = Seq("", "a", "abcd", "abcdefgh", "aaaaaaaaaaaa", "日本語テキストabc", "xy" * 40).toDF("t")
+    // short random texts: the reference recomputes every key per window
+    // (O(n²) md5s per text)
+    val rnd = new scala.util.Random(7)
+    val alphabet = "abcdefXYZ0189 .,-éñ中"
+    val random = Seq.fill(60)(Seq.fill(rnd.nextInt(120))(alphabet(rnd.nextInt(alphabet.length))).mkString)
+      .toDF("t")
+    Seq(edges, random).foreach { df =>
+      Seq((5, 4), (1, 1), (3, 7)).foreach { case (k, w) =>
+        val diff = df
+          .select(
+            call_function("graft_winnow_mins", col("t"), lit(k), lit(w)).as("n"),
+            treeMins(col("t"), k, w).as("t"))
+          .filter(col("n") =!= col("t")).count()
+        assert(diff == 0, s"native winnow minimums diverged on $diff rows at k=$k w=$w")
+      }
+    }
+    val nulls = Seq(Option.empty[String]).toDF("t")
+      .select(call_function("graft_winnow_mins", col("t"), lit(5), lit(4))).collect()(0)
+    assert(nulls.isNullAt(0), "null text must stay null")
+  }
 }
