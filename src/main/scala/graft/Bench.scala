@@ -588,9 +588,8 @@ object Bench {
   /** One synthetic-fleet pipeline execution at `nSites` (3 yr @
     * 1-min each): returns (rows, wall seconds). The fleet is
     * materialized BEFORE the clock starts: the reference's 25.99 s is
-    * pipeline-on-loaded-data (its CSV is read before run_pipeline),
-    * and dayRows legitimately makes three passes over its input —
-    * against a generated subtree each pass would re-run the trig,
+    * pipeline-on-loaded-data (its CSV is read before run_pipeline);
+    * against a generated subtree the run would re-evaluate the trig,
     * measuring the generator instead of the pipeline.
     */
   /** Above this row count the pre-generated scale input caches

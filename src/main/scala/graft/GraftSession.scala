@@ -72,6 +72,14 @@ object GraftSession {
       .config(staticConfs.toMap)
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    install(spark)
+  }
+
+  /** The engine's session-level additions, for every session builder
+    * in the engine (`local`, `Verify`): the native functions and the
+    * Catalyst rewrites. Returns `spark`.
+    */
+  def install(spark: SparkSession): SparkSession = {
     // ensure, not register: getOrCreate returns the SAME session to
     // every caller in a JVM (every test suite, every probe main), and
     // re-registering ~40 functions logs a WARN per function per

@@ -3825,9 +3825,10 @@ object SparkEntry {
   /** p01's SQL-expressible spine, hash-gated (the e18 pattern: the
     * oracle re-derives the exact baseline from raw events): the fleet
     * report's relational columns — day count and p95 capacity — come
-    * straight from `Pipeline.dayStats`, the same stage-1/2 plan the
-    * full pipeline feeds its solvers from. Catalyst can't prune
-    * through the solver `mapGroups`, so gating these two columns via
+    * straight from `Pipeline.dayStats`, the relational form of the day
+    * aggregates the full pipeline's site lane builds per site
+    * (DayRowLaneSpec holds the two together). Catalyst can't prune
+    * through the solver lane, so gating these two columns via
     * `p01(…).select(…)` re-ran the entire solver fleet (~13 s at
     * sf0.1) for a projection the relational spine answers in one
     * scan; the rounding contract is unchanged. Solver columns stay

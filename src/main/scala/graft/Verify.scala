@@ -48,13 +48,11 @@ object Verify {
     case other => other.toString
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = args(0)
-    val outDir = args(1)
-    // Optional trailing args: run only these queries (dev loop; the
-    // driver always passes exactly two args → full run).
-    val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+  /** The gate's session on `cpus` local cores: the engine's functions
+    * and Catalyst rules ([[GraftSession.install]]) with the gate's own
+    * partitioning and the shared filled-grid build.
+    */
+  private[graft] def session(cpus: String): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -67,6 +65,17 @@ object Verify {
       .config(GraftSession.staticConfs.toMap)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    GraftSession.install(spark)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = args(0)
+    val outDir = args(1)
+    // Optional trailing args: run only these queries (dev loop; two
+    // args → full run).
+    val only = args.drop(2).toSet
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = session(cpus)
     new java.io.File(outDir).mkdirs()
     val snapDir = Paths.get("bench", "verify_snapshots",
       Paths.get(sfDir).getFileName.toString)

@@ -1,5 +1,11 @@
 package graft.analyses
 
+import java.time.{ZoneId, ZoneOffset}
+
+import scala.reflect.ClassTag
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
@@ -7,17 +13,10 @@ import graft.operators.{DayStats, SideJoin, TimeAxis}
 import graft.solvers.{Cluster, Kernels}
 
 /** Per-(site, day) fact row — the bounded per-site state handed to the
-  * solver stages. O(num_days) doubles per site regardless of raw scan
-  * rate, so executor memory is flat in data size (SURVEY §4.1).
-  *
-  * Primitive fields only, by design: the fleet shuffle moves these as
-  * Tungsten UnsafeRows and the typed decode constructs ONE flat
-  * object per row with unboxed constructor arguments. (Round 13 —
-  * the previous lane pulled a generic Tuple9 through an RDD shuffle:
-  * 9 boxed fields + 2 key boxes per day row, ~280M transient objects
-  * at fleet16 grain, and that allocation churn was exactly the
-  * memory-bandwidth sensitivity that made the fleet lane the first
-  * casualty of host co-tenancy in rounds 10–12.)
+  * solver stages: O(num_days) doubles per site regardless of the raw
+  * scan rate. Built inside the fleet lane's task from that site's raw
+  * rows ([[Pipeline.siteDays]]), so it never crosses a shuffle; flat
+  * primitive fields, one object per day.
   */
 case class DayRow(
     site: Long,
@@ -30,6 +29,9 @@ case class DayRow(
     capacity: Double,
     smoothness: Double
 )
+
+/** One raw observation on the fleet lane: `ts` in epoch microseconds. */
+private[graft] case class RawObs(site: Long, ts: Long, value: Double)
 
 /** Fleet result row (reference `sdt_dask/dask_tool/runner.py:44-194`):
   * one row per site with pipeline metrics, loss attribution, and
@@ -62,66 +64,67 @@ case class SiteReport(
 )
 
 /** The fleet pipeline (reference `DataHandler.run_pipeline`,
-  * `data_handler.py:326-716`) re-expressed Spark-first:
+  * `data_handler.py:326-716`) re-expressed Spark-first, as ONE
+  * shuffle: the raw `(site, ts, value)` rows cross one [[SiteLane]]
+  * (a fixed site partitioner, sorted by site, `ts`, value), and each
+  * task builds a site's day rows ([[siteDays]]: capacity p95, day
+  * aggregates, smoothness) and runs its solver stages
+  * ([[analyzeSite]]) in the same pass — the Dask per-site task graph
+  * (`runner.py:177-194`) becomes Spark partition-parallelism, one job
+  * and two stages for the whole fleet.
   *
-  *  - stages 1–2 (standardize, day stats) are one relational plan over
-  *    all sites at once — aggregation with map-side combine, shuffle
-  *    volume O(sites × days);
-  *  - solver stages run fleet-parallel in one [[SiteLane]] (a fixed
-  *    site partitioner, sorted by site then day) — the Dask per-site
-  *    task graph (`runner.py:177-194`) becomes Spark
-  *    partition-parallelism, one job for the whole fleet.
+  * Memory: a task holds one site's raw rows, about 24 B per row (the
+  * `ts` and value arrays plus the sorted copy for the p95) — a site at
+  * 1-minute cadence for 20 years (10.5 M rows) needs about 250 MB.
+  * Parallelism is across sites only: a fleet with fewer sites than
+  * cores leaves cores idle.
   */
 object Pipeline {
 
-  /** The solver lane's sort: site, then day. */
-  private implicit val dayRowOrdering: Ordering[DayRow] = new Ordering[DayRow] {
-    override def compare(a: DayRow, b: DayRow): Int = {
-      val c = java.lang.Long.compare(a.site, b.site)
-      if (c != 0) c else java.lang.Double.compare(a.dayIdx, b.dayIdx)
-    }
-  }
-
-  /** The day-grain aggregate list both [[dayStats]] and [[dayRows]]
-    * emit — one definition so the two frames cannot drift.
+  /** The fleet lane's sort: site, then `ts`, then value — the value
+    * pins the order of rows that share a timestamp (total order:
+    * -0.0 before 0.0, NaN last).
     */
-  private def dayAggExprs(tsCol: String, valueCol: String) = {
-    val h = TimeAxis.hourOfDay(col(tsCol))
-    Seq(
-      (sum(col(valueCol)) * 24.0 / count(lit(1))).as("energy"),
-      avg(when(col(valueCol) > col("capacity") * 0.02, 1.0).otherwise(0.0)).as("density"),
-      max(col(valueCol)).as("daily_max"),
-      coalesce(try_divide(sum(h * col(valueCol)), sum(col(valueCol))), lit(Double.NaN)).as("com_hour"),
-      count(col(valueCol)).as("n_obs"),
-      first(col("capacity")).as("capacity")
-    )
+  private implicit val rawObsOrdering: Ordering[RawObs] = new Ordering[RawObs] {
+    override def compare(a: RawObs, b: RawObs): Int = {
+      val c = java.lang.Long.compare(a.site, b.site)
+      if (c != 0) c
+      else {
+        val t = java.lang.Long.compare(a.ts, b.ts)
+        if (t != 0) t else java.lang.Double.compare(a.value, b.value)
+      }
+    }
   }
 
   /** Build the DayStats fact table for a long (site, ts, value)
     * input. Single aggregation pass + one [[SideJoin]] (broadcast by
-    * default) of the per-site capacity.
+    * default) of the per-site capacity. The fleet lane's
+    * [[siteDays]] computes the same aggregates per site in `ts`
+    * order (DayRowLaneSpec pins the two against each other).
     */
   def dayStats(df: DataFrame, site: String, tsCol: String, valueCol: String): DataFrame = {
     // null rows carry no signal and would (a) bias energy low — the
     // mean-power×24 divides by the ALL-row count — and (b) let an
-    // all-null day emit null energy/max that crashes run()'s
-    // non-nullable decode outside the per-stage catch
+    // all-null day emit null energy/max
     val clean = df.filter(col(tsCol).isNotNull && col(valueCol).isNotNull)
     val cap = DayStats.capacity(clean, site, valueCol)
-    val aggs = dayAggExprs(tsCol, valueCol)
+    val h = TimeAxis.hourOfDay(col(tsCol))
+    val v = col(valueCol)
     SideJoin.back(clean, cap, Seq(site))
       .groupBy(col(site).as("site"), to_date(col(tsCol)).as("day"))
-      .agg(aggs.head, aggs.tail: _*)
+      .agg(
+        (sum(v) * 24.0 / count(lit(1))).as("energy"),
+        avg(when(v > col("capacity") * 0.02, 1.0).otherwise(0.0)).as("density"),
+        max(v).as("daily_max"),
+        coalesce(try_divide(sum(h * v), sum(v)), lit(Double.NaN)).as("com_hour"),
+        count(v).as("n_obs"),
+        first(col("capacity")).as("capacity"))
   }
 
-  /** The solver stages' per-(site, day) input frame: [[dayStats]]
-    * plus the day index and the intra-day smoothness signal
-    * (Σ|2nd difference| of the value in time order — the reference's
-    * `get_clear_day_scores` smoothness channel,
-    * `clear_day_detection.py`). Smoothness is a SEPARATE window
-    * branch joined at day grain so [[dayStats]] itself keeps its
-    * shuffle-light partial-aggregate plan (p06/p07's relational spine
-    * never pays the row-grain window).
+  /** The solver stages' per-(site, day) input as a frame: `(site,
+    * day_idx, energy, density, daily_max, com_hour, n_obs, capacity,
+    * smoothness)`, the rows [[run]] hands to [[analyzeSite]], built by
+    * the same lane.
     */
   private[graft] def dayRows(
       df: DataFrame,
@@ -129,57 +132,122 @@ object Pipeline {
       tsCol: String,
       valueCol: String
   ): DataFrame = {
-    val clean = df.filter(col(tsCol).isNotNull && col(valueCol).isNotNull)
-    // Round-11 fusion (VERDICT r10 item 2): the smoothness Σ|Δ²| used
-    // to be a SEPARATE window branch joined back at day grain, making
-    // dayRows re-evaluate the raw value subtree three times (capacity
-    // agg, day agg, smoothness window — Spark plans trees, not DAGs).
-    // Computing __d2 via the (site, day)-partitioned window and then
-    // aggregating ALL the day stats in the SAME plan removes the
-    // extra full scan AND the join: the groupBy on (site, day) reuses
-    // the window's hash partitioning (no Exchange between them —
-    // pinned by PlanSpec's dayRows test). Values are bit-identical:
-    // the window neither drops nor reorders rows for the aggregate,
-    // and sum(abs(__d2)) over the nulls of the first two slots of a
-    // day matches the old branch exactly. (Probed and rejected
-    // earlier: collect_list fusion — 25M structs per pass, GC storm.)
-    // dayStats itself keeps its shuffle-light partial-aggregate plan
-    // for the relational spine (p06/p07) which never pays the window.
-    // The capacity side contributes two further COLUMN-PRUNED passes
-    // (the histogram percentile's bin-count + candidate scans) — the
-    // deliberate trade against shuffling every (site, value) row.
-    val cap = DayStats.capacity(clean, site, valueCol)
-    // __day is materialized ONCE and used as the same attribute in
-    // both the window partitioning and the groupBy keys: Spark's
-    // EnsureRequirements then sees the window's hashpartitioning
-    // (site, __day) already satisfies the aggregate's distribution,
-    // so no second Exchange appears (grouping on a fresh
-    // to_date(ts) expression would re-shuffle the day-grain rows).
-    val wd = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(site), col("__day")).orderBy(col(tsCol))
-    val aggs = dayAggExprs(tsCol, valueCol) :+
-      sum(abs(col("__d2"))).as("smoothness")
-    val stats = SideJoin.back(clean, cap, Seq(site))
-      .withColumn("__day", to_date(col(tsCol)))
-      .withColumn("__d2",
-        col(valueCol) - lit(2.0) * lag(col(valueCol), 1).over(wd)
-          + lag(col(valueCol), 2).over(wd))
-      .groupBy(col(site).as("site"), col("__day").as("day"))
-      .agg(aggs.head, aggs.tail: _*)
-    // first_day via a window over the DAY-GRAIN stats (thousands of
-    // rows), not a separate aggregate joined back — a firstDay branch
-    // would re-evaluate the whole subtree above.
-    val wSite = org.apache.spark.sql.expressions.Window.partitionBy(col("site"))
-    stats
-      .withColumn("first_day", min(col("day")).over(wSite))
-      .withColumn("day_idx", datediff(col("day"), col("first_day")).cast("double"))
-      .select(
-        col("site"), col("day_idx"), col("energy"), col("density"),
-        col("daily_max"), col("com_hour"), col("n_obs"), col("capacity"),
-        // a <3-obs day has no 2nd difference: -1 = "no signal" (a sum
-        // of |·| is never negative), excluded from the clear-day rule
-        // and from the fleet smoothness scale in analyzeSite
-        coalesce(col("smoothness"), lit(-1.0)).as("smoothness"))
+    val spark = df.sparkSession
+    import spark.implicits._
+    spark.createDataset(dayLane(df, site, tsCol, valueCol)((_, days) => days.iterator))
+      .toDF("site", "day_idx", "energy", "density", "daily_max", "com_hour", "n_obs",
+        "capacity", "smoothness")
+  }
+
+  /** The fleet lane: key the non-null raw rows by site through
+    * [[SiteLane]] and hand each site's [[siteDays]] to `solve`.
+    */
+  private def dayLane[O: ClassTag](df: DataFrame, site: String, tsCol: String, valueCol: String)(
+      solve: (Long, Array[DayRow]) => Iterator[O]
+  ): RDD[O] = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    val zone = DateTimeUtils.getZoneId(spark.sessionState.conf.sessionLocalTimeZone)
+    // a TIMESTAMP_NTZ column is cast to TIMESTAMP (exact under the
+    // engine's UTC session, as in sources.Tables)
+    val raw = df.filter(col(site).isNotNull && col(tsCol).isNotNull && col(valueCol).isNotNull)
+      .select(col(site).cast("long").as("site"),
+        unix_micros(col(tsCol).cast("timestamp")).as("ts"),
+        col(valueCol).cast("double").as("value"))
+      .as[RawObs]
+    SiteLane(raw, (r: RawObs) => r.site)((id, rows) => solve(id, siteDays(id, rows, zone)))
+  }
+
+  private val MicrosPerDay = 86400000000L
+
+  /** Spark's `>` on doubles: NaN is the greatest value and equal to
+    * itself, and -0.0 equals 0.0 (`SQLOrderingUtil.compareDoubles`).
+    */
+  private def gt(a: Double, b: Double): Boolean =
+    a != b && java.lang.Double.compare(a, b) > 0
+
+  /** One site's day rows from its raw rows in (`ts`, value) order —
+    * the values of the relational form `dayStats` + Σ|Δ²| smoothness
+    * + day index, bit for bit (DayRowLaneSpec):
+    *
+    *  - day = the session-zone date of `ts` (`to_date`); hour = whole
+    *    seconds since that date's start / 3600.0;
+    *  - capacity = the site's exact p95 as `Percentile.getPercentile`
+    *    takes it (`pos = 0.95·(n−1)`, floor/ceil keys, equal-key
+    *    short-circuit, linear interpolation);
+    *  - every sum starts at 0.0 and adds in `ts` order, as Spark's
+    *    `Sum` does; `max` and `>` follow Spark's double ordering;
+    *  - `com_hour` is NaN where Σv == 0.0 (`try_divide` → null →
+    *    `coalesce`); smoothness is Σ|(v − 2·v₋₁) + v₋₂| within the
+    *    day (the reference's `get_clear_day_scores` smoothness
+    *    channel, `clear_day_detection.py`), or −1.0 ("no signal",
+    *    which `analyzeSite` leaves out) for a day with fewer than 3
+    *    rows.
+    *
+    * A day's rows are contiguous in `ts` order: always in UTC, and in
+    * any zone whose clock never falls back across midnight.
+    */
+  private def siteDays(siteId: Long, rows: Iterator[RawObs], zone: ZoneId): Array[DayRow] = {
+    var ts = new Array[Long](1024)
+    var vs = new Array[Double](1024)
+    var n = 0
+    rows.foreach { r =>
+      if (n == ts.length) {
+        ts = java.util.Arrays.copyOf(ts, n * 2)
+        vs = java.util.Arrays.copyOf(vs, n * 2)
+      }
+      ts(n) = r.ts
+      vs(n) = r.value
+      n += 1
+    }
+    if (n == 0) return Array.empty
+    val capacity = {
+      val sorted = java.util.Arrays.copyOf(vs, n)
+      java.util.Arrays.sort(sorted)
+      val pos = 0.95 * (n - 1).toDouble
+      val lo = math.floor(pos).toLong
+      val hi = math.ceil(pos).toLong
+      val lk = sorted(lo.toInt)
+      val hk = sorted(hi.toInt)
+      if (lo == hi || lk == hk) lk
+      else (hi.toDouble - pos) * lk + (pos - lo.toDouble) * hk
+    }
+    val densityFloor = capacity * 0.02
+    val utc = zone.normalized() == ZoneOffset.UTC
+    def dayOf(us: Long): Int =
+      if (utc) Math.floorDiv(us, MicrosPerDay).toInt else DateTimeUtils.microsToDays(us, zone)
+    val out = scala.collection.mutable.ArrayBuffer.empty[DayRow]
+    val firstDay = dayOf(ts(0))
+    var i = 0
+    while (i < n) {
+      val day = dayOf(ts(i))
+      val dayStartS =
+        if (utc) day * 86400L else Math.floorDiv(DateTimeUtils.daysToMicros(day, zone), 1000000L)
+      var cnt = 0L
+      var dense = 0L
+      var sum = 0.0
+      var hourSum = 0.0
+      var mx = 0.0
+      var smooth = 0.0
+      var p1 = 0.0
+      var p2 = 0.0
+      while (i < n && dayOf(ts(i)) == day) {
+        val v = vs(i)
+        sum += v
+        if (gt(v, densityFloor)) dense += 1
+        if (cnt == 0 || gt(v, mx)) mx = v
+        hourSum += (Math.floorDiv(ts(i), 1000000L) - dayStartS).toDouble / 3600.0 * v
+        if (cnt >= 2) smooth += math.abs((v - 2.0 * p1) + p2)
+        p2 = p1
+        p1 = v
+        cnt += 1
+        i += 1
+      }
+      out += DayRow(siteId, (day - firstDay).toDouble, sum * 24.0 / cnt.toDouble,
+        dense.toDouble / cnt.toDouble, mx, if (sum == 0.0) Double.NaN else hourSum / sum,
+        cnt, capacity, if (cnt < 3) -1.0 else smooth)
+    }
+    out.toArray
   }
 
   /** Run the full per-site analysis fleet-wide.
@@ -211,14 +279,8 @@ object Pipeline {
       faultInjector: (Long, String) => Unit = (_, _) => ()
   ): Dataset[SiteReport] = {
     import spark.implicits._
-    val rows = dayRows(df, site, tsCol, valueCol)
-      .select(col("site"), col("day_idx").as("dayIdx"), col("energy"),
-        col("density"), col("daily_max").as("dailyMax"),
-        col("com_hour").as("comHour"), col("n_obs").as("nObs"),
-        col("capacity"), col("smoothness"))
-      .as[DayRow]
-    val solved = SiteLane(rows, (r: DayRow) => r.site) { (siteId, days) =>
-      Iterator.single(analyzeSite(siteId, days.toArray, period, faultInjector(siteId, _)))
+    val solved = dayLane(df, site, tsCol, valueCol) { (siteId, days) =>
+      Iterator.single(analyzeSite(siteId, days, period, faultInjector(siteId, _)))
     }
     spark.createDataset(solved)
   }

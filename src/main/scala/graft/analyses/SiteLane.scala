@@ -7,8 +7,9 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.Dataset
 
 /** The per-site solver lane: `groupBy(site)` parallelism for CPU-dense
-  * stages whose per-site input is a few KB (day stats, a dilated grid)
-  * but whose per-site work is an IRLS / DP / DBSCAN solve.
+  * stages whose per-site work is an IRLS / DP / DBSCAN solve — on a
+  * site's raw rows (`Pipeline.run`, which builds the day rows in the
+  * task) or on a few KB of derived state (a dilated grid).
   *
   * Rows cross one RDD shuffle with a FIXED partitioner over
   * `defaultParallelism` partitions (site `s` goes to partition

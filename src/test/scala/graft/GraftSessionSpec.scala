@@ -8,7 +8,8 @@ import org.scalatest.time.{Seconds, Span}
 
 /** The session's static settings hold: the Catalyst codegen cache keeps
   * a catalog mix's generated classes across passes, and the status
-  * store stops growing at its retention limit.
+  * store stops growing at its retention limit. Verify's session carries
+  * the engine's Catalyst rules.
   */
 class GraftSessionSpec extends AnyFunSuite with Eventually {
   lazy val spark: SparkSession = GraftSession.local("4")
@@ -40,6 +41,23 @@ class GraftSessionSpec extends AnyFunSuite with Eventually {
     eventually(timeout(Span(30, Seconds))) {
       val kept = spark.sharedState.statusStore.executionsCount()
       assert(kept <= GraftSession.RetainedExecutions, s"$kept executions retained")
+    }
+  }
+
+  test("Verify's session runs the engine's Catalyst rules: q82 plans the bucket explode") {
+    // whatever session this JVM already holds, the gate's own builder
+    // must install the rules; the gate's confs are put back afterwards
+    spark.experimental.extraOptimizations = Nil
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize", "spark.graft.filledGrid.cache")
+    val before = keys.map(k => k -> spark.conf.getOption(k))
+    try {
+      val gate = Verify.session("4")
+      val plan = SparkEntry.queries("q82_interval_rule")(gate, dir).queryExecution.optimizedPlan.toString
+      assert(plan.contains("Generate") && plan.contains("explode("), s"no bucket explode in q82:\n$plan")
+    } finally {
+      GraftSession.install(spark)
+      before.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
     }
   }
 }

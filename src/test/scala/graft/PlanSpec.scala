@@ -383,31 +383,51 @@ class PlanSpec extends AnyFunSuite {
       "expected the bucket explode")
   }
 
-  test("dayRows fusion: 3 column-pruned scans, smoothness aggregate reuses the window's partitioning") {
-    import org.apache.spark.sql.functions.col
-    val df = graft.sources.Tables.events(spark, dir)
-      .select(col("user_id").as("site"), col("ts"), col("value"))
-    val rows = graft.analyses.Pipeline.dayRows(df, "site", "ts", "value")
-    val p = rows.queryExecution.executedPlan.toString
-    // one fused window+agg scan, plus the histogram percentile's two
-    // column-pruned passes (bin counts + candidate extraction) — the
-    // round-10 plan instead paid a separate full smoothness scan AND
-    // a day-grain join on top of the capacity side
-    val scans = "Scan parquet".r.findAllIn(p).length
-    assert(scans == 3, s"dayRows planned $scans source scans (expected 3):\n$p")
-    // the day aggregate carrying the smoothness sum must sit DIRECTLY
-    // on the row-grain lag window (same (site, __day) hash
-    // partitioning — no Exchange between them). Walk down from the
-    // partial smoothness aggregate: the next shuffle-or-window node
-    // below it must be the Window, not an Exchange.
-    val lines = p.linesIterator.toVector
-    val aggIdx = lines.indexWhere(_.contains("partial_sum(abs("))
-    assert(aggIdx >= 0, s"fused smoothness partial aggregate not found:\n$p")
-    val below = lines.drop(aggIdx + 1)
-      .find(l => l.contains("Exchange") || l.contains("Window ["))
-    assert(below.exists(_.contains("Window [")),
-      s"smoothness aggregate re-shuffled instead of riding the window partitioning (next node: $below):\n$p")
-    assert(!p.contains("SortMergeJoin"), s"day-grain smoothness join is back:\n$p")
+  test("Pipeline.run on a cached fleet is one job of two stages") {
+    import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler._
+    // the raw rows cross ONE shuffle into the site lane, which builds
+    // the day rows and solves each site in the same task: a map stage
+    // and a result stage, no relational day-row plan in front
+    val fleet = graft.sources.Synth.pvFleet(spark, nSites = 4, nDays = 30, slotsPerDay = 24).cache()
+    fleet.write.format("noop").mode("overwrite").save()
+    val sc = spark.sparkContext
+    val group = "plan-spec-pipeline-run"
+    val sentinel = "plan-spec-drain"
+    val jobs = new AtomicInteger
+    val stages = new AtomicInteger
+    val sentinelJobs = ConcurrentHashMap.newKeySet[Integer]()
+    val drained = new CountDownLatch(1)
+    def groupOf(p: java.util.Properties): String = Option(p).map(_.getProperty("spark.jobGroup.id")).orNull
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = groupOf(e.properties) match {
+        case `group` => jobs.incrementAndGet()
+        case `sentinel` => sentinelJobs.add(e.jobId)
+        case _ =>
+      }
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (groupOf(e.properties) == group) stages.incrementAndGet()
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (sentinelJobs.contains(e.jobId)) drained.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "Pipeline.run")
+      graft.analyses.Pipeline.run(spark, fleet, "site", "ts", "power").toDF()
+        .write.format("noop").mode("overwrite").save()
+      // listener events arrive in order: once the sentinel job's end is
+      // delivered, so is every event of the run before it
+      sc.setJobGroup(sentinel, "listener drain")
+      sc.parallelize(1 to 1, 1).count()
+      assert(drained.await(60, TimeUnit.SECONDS), "listener bus did not drain")
+      assert(jobs.get == 1, s"Pipeline.run ran ${jobs.get} jobs")
+      assert(stages.get == 2, s"Pipeline.run ran ${stages.get} stages")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+      fleet.unpersist()
+    }
   }
 
   test("fleet batch-estimation joins stay broadcast-shaped: resume anti-join + metadata dim (q99)") {
