@@ -1,6 +1,6 @@
 package graft.analyses
 
-import java.time.{ZoneId, ZoneOffset}
+import java.time.ZoneId
 
 import scala.reflect.ClassTag
 
@@ -73,11 +73,14 @@ case class SiteReport(
   * (`runner.py:177-194`) becomes Spark partition-parallelism, one job
   * and two stages for the whole fleet.
   *
-  * Memory: a task holds one site's raw rows, about 24 B per row (the
-  * `ts` and value arrays plus the sorted copy for the p95) — a site at
-  * 1-minute cadence for 20 years (10.5 M rows) needs about 250 MB.
-  * Parallelism is across sites only: a fleet with fewer sites than
-  * cores leaves cores idle.
+  * Memory: a task holds one site's raw rows in a `ts` and a value
+  * array grown by doubling, plus the p95's sorted copy — up to about
+  * 40 B per row at peak, since the last doubling briefly holds the old
+  * and new arrays together: a site at 1-minute cadence for 20 years
+  * (10.5 M rows) peaks at about 400 MB. The lane's shuffle-read sort
+  * also buffers the partition's rows as objects; that buffer spills to
+  * disk under Spark's execution-memory limit. Parallelism is across
+  * sites only: a fleet with fewer sites than cores leaves cores idle.
   */
 object Pipeline {
 
@@ -149,16 +152,15 @@ object Pipeline {
     import spark.implicits._
     val zone = DateTimeUtils.getZoneId(spark.sessionState.conf.sessionLocalTimeZone)
     // a TIMESTAMP_NTZ column is cast to TIMESTAMP (exact under the
-    // engine's UTC session, as in sources.Tables)
+    // engine's UTC session, as in sources.Tables); the site is left to
+    // `as[RawObs]`'s upcast, which widens an int and refuses a lossy type
     val raw = df.filter(col(site).isNotNull && col(tsCol).isNotNull && col(valueCol).isNotNull)
-      .select(col(site).cast("long").as("site"),
+      .select(col(site).as("site"),
         unix_micros(col(tsCol).cast("timestamp")).as("ts"),
         col(valueCol).cast("double").as("value"))
       .as[RawObs]
     SiteLane(raw, (r: RawObs) => r.site)((id, rows) => solve(id, siteDays(id, rows, zone)))
   }
-
-  private val MicrosPerDay = 86400000000L
 
   /** Spark's `>` on doubles: NaN is the greatest value and equal to
     * itself, and -0.0 equals 0.0 (`SQLOrderingUtil.compareDoubles`).
@@ -213,16 +215,16 @@ object Pipeline {
       else (hi.toDouble - pos) * lk + (pos - lo.toDouble) * hk
     }
     val densityFloor = capacity * 0.02
-    val utc = zone.normalized() == ZoneOffset.UTC
-    def dayOf(us: Long): Int =
-      if (utc) Math.floorDiv(us, MicrosPerDay).toInt else DateTimeUtils.microsToDays(us, zone)
     val out = scala.collection.mutable.ArrayBuffer.empty[DayRow]
-    val firstDay = dayOf(ts(0))
+    val firstDay = DateTimeUtils.microsToDays(ts(0), zone)
     var i = 0
     while (i < n) {
-      val day = dayOf(ts(i))
-      val dayStartS =
-        if (utc) day * 86400L else Math.floorDiv(DateTimeUtils.daysToMicros(day, zone), 1000000L)
+      // the zone is consulted once per day, not once per row
+      val day = DateTimeUtils.microsToDays(ts(i), zone)
+      val dayStartS = Math.floorDiv(DateTimeUtils.daysToMicros(day, zone), 1000000L)
+      // at least this row, should a midnight that falls back put it
+      // past the next day's start
+      val next = math.max(DateTimeUtils.daysToMicros(day + 1, zone), ts(i) + 1)
       var cnt = 0L
       var dense = 0L
       var sum = 0.0
@@ -231,7 +233,7 @@ object Pipeline {
       var smooth = 0.0
       var p1 = 0.0
       var p2 = 0.0
-      while (i < n && dayOf(ts(i)) == day) {
+      while (i < n && ts(i) < next) {
         val v = vs(i)
         sum += v
         if (gt(v, densityFloor)) dense += 1

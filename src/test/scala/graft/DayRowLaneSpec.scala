@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.analyses.Pipeline
@@ -151,6 +151,21 @@ class DayRowLaneSpec extends AnyFunSuite {
           s"$p partitions")
       }
     } finally df.unpersist()
+  }
+
+  test("the site column widens from int, and a lossy site type is refused at analysis") {
+    val rows = Seq((1, T0, 1.0), (1, T0 + Hour, 2.0), (-2, T0, 3.0)).toDF("site", "us", "value")
+      .select(col("site"), expr("timestamp_micros(us)").as("ts"), col("value"))
+    assertSameBits(bits(Pipeline.dayRows(rows, "site", "ts", "value")),
+      bits(Pipeline.dayRows(rows.withColumn("site", col("site").cast("long")), "site", "ts", "value")),
+      "int site")
+    // sites 1.2 and 1.7 would both become site 1
+    val fractional = Seq((1.2, T0, 1.0), (1.7, T0, 2.0)).toDF("site", "us", "value")
+      .select(col("site"), expr("timestamp_micros(us)").as("ts"), col("value"))
+    Seq(fractional, rows.withColumn("site", col("site").cast("string"))).foreach { df =>
+      val e = intercept[AnalysisException](Pipeline.run(spark, df, "site", "ts", "value"))
+      assert(e.getMessage.toLowerCase.contains("up cast"), e.getMessage)
+    }
   }
 
   test("a non-UTC session zone: days and hours follow the zone through both DST changes") {
