@@ -43,14 +43,6 @@ object GraftSession {
   /** Task records the status store keeps. */
   val RetainedTasks = 5000
 
-  /** The static settings above, for every session builder in the engine. */
-  val staticConfs: Seq[(String, String)] = Seq(
-    "spark.sql.codegen.cache.maxEntries" -> CodegenCacheEntries.toString,
-    "spark.sql.ui.retainedExecutions" -> RetainedExecutions.toString,
-    "spark.ui.retainedJobs" -> RetainedExecutions.toString,
-    "spark.ui.retainedStages" -> RetainedExecutions.toString,
-    "spark.ui.retainedTasks" -> RetainedTasks.toString)
-
   def local(cores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")): SparkSession = {
     val b = SparkSession
       .builder()
@@ -69,15 +61,18 @@ object GraftSession {
       // fixed-partitioner RDD stage AQE never re-coalesces.
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config(staticConfs.toMap)
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      .config("spark.sql.ui.retainedExecutions", RetainedExecutions.toString)
+      .config("spark.ui.retainedJobs", RetainedExecutions.toString)
+      .config("spark.ui.retainedStages", RetainedExecutions.toString)
+      .config("spark.ui.retainedTasks", RetainedTasks.toString)
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     install(spark)
   }
 
-  /** The engine's session-level additions, for every session builder
-    * in the engine (`local`, `Verify`): the native functions and the
-    * Catalyst rewrites. Returns `spark`.
+  /** The engine's session-level additions: the native functions and
+    * the Catalyst rewrites. Returns `spark`.
     */
   def install(spark: SparkSession): SparkSession = {
     // ensure, not register: getOrCreate returns the SAME session to

@@ -48,24 +48,18 @@ object Verify {
     case other => other.toString
   }
 
-  /** The gate's session on `cpus` local cores: the engine's functions
-    * and Catalyst rules ([[GraftSession.install]]) with the gate's own
-    * partitioning and the shared filled-grid build.
+  /** The gate's session on `cpus` local cores: the engine's session
+    * ([[GraftSession.local]]) with the gate's own partitioning and the
+    * shared filled-grid build.
     */
   private[graft] def session(cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the study-gate family (q50/q64/q65/q66/q88/q89) shares one
-      // persisted filled-grid build instead of six identical rebuilds
-      .config("spark.graft.filledGrid.cache", "true")
-      .config(GraftSession.staticConfs.toMap)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.install(spark)
+    val spark = GraftSession.local(cpus)
+    spark.conf.set("spark.sql.shuffle.partitions", cpus)
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
+    // the study-gate family (q50/q64/q65/q66/q88/q89) shares one
+    // persisted filled-grid build instead of six identical rebuilds
+    spark.conf.set("spark.graft.filledGrid.cache", "true")
+    spark
   }
 
   def main(args: Array[String]): Unit = {

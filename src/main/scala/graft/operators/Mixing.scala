@@ -95,15 +95,19 @@ object Mixing {
       strataCols: Seq[String],
       tokenBudget: Double
   ): DataFrame = {
-    counts
-      .withColumn("__r", sqrt(col("n_stratum").cast("double")))
-      // ordered fold: collect (key, sqrt) pairs, sort by key, fold left —
-      // the sum is evaluated in stratum-key order on both engines
-      .withColumn(
-        "__tot",
+    val withR = counts.withColumn("__r", sqrt(col("n_stratum").cast("double")))
+    // one global aggregate gathers the strata rows and their ordered
+    // fold — collect (key, sqrt) pairs, sort by key, fold left, so the
+    // sum is evaluated in stratum-key order on both engines — and the
+    // rows are unnested again beside the total. Same single-partition
+    // exchange as an `over ()` window, without WindowExec's
+    // no-partition warning on every call.
+    withR
+      .agg(
+        collect_list(struct(withR.columns.map(col): _*)).as("__rows"),
         expr("aggregate(transform(sort_array(collect_list(struct(" +
-          strataCols.mkString(", ") + ", __r)) over ()), x -> x.__r), 0D, (a, x) -> a + x)")
-      )
+          strataCols.mkString(", ") + ", __r))), x -> x.__r), 0D, (a, x) -> a + x)").as("__tot"))
+      .select(inline(col("__rows")), col("__tot"))
       .withColumn("weight", round(col("__r") / col("__tot"), 6))
       .withColumn("epochs", round(lit(tokenBudget) * col("__r") / col("__tot") / col("n_stratum"), 6))
       .drop("__r", "__tot")

@@ -1,18 +1,72 @@
 package graft.sources
 
+import java.io.FileNotFoundException
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Readers for the harness tables (one parquet file per table under an
   * sf directory). Column pruning and predicate pushdown reach the
   * parquet scan because these return plain lazy DataFrames.
   *
+  * Opening a table costs no Spark job once its schema is known. Spark's
+  * parquet schema inference runs a job to read one footer, so each
+  * file's inferred schema is kept on the driver and the file is read
+  * through `spark.read.schema(s)`, which plans the same scan:
+  *
+  *  - The cache key is the file's qualified path. An entry holds the
+  *    file's length and modification time (its Hadoop `FileStatus`)
+  *    and the session's `spark.sql.legacy.parquet.nanosAsLong`, all of
+  *    which the schema depends on.
+  *  - Every read stats the file. If any of the three differs from the
+  *    entry, the schema is inferred again and REPLACES the path's
+  *    entry, so the cache holds at most one schema per path: driver
+  *    memory is bounded by the number of distinct table files read,
+  *    however often one of them is rewritten.
+  *  - A directory (or any non-file path) is read the old way, with
+  *    inference on every call: its modification time does not change
+  *    when a file beneath it is rewritten, so it cannot key a cache.
+  *  - A missing path is read the old way too, so it still fails with
+  *    Spark's own `AnalysisException` (`PATH_NOT_FOUND`), which
+  *    [[registerViews]] and callers rely on.
+  *
   * At cluster scale the same API reads a partitioned directory tree
   * (e.g. `.../events/site=.../date=...`) and Catalyst prunes partitions
   * from the same declarative plans.
   */
 object Tables {
+
+  private final case class Inferred(length: Long, modified: Long, nanosAsLong: String, schema: StructType)
+
+  /** Qualified file path → the schema inferred at the entry's file state. */
+  private val schemas = new ConcurrentHashMap[String, Inferred]()
+
+  /** `spark.read.parquet(path)`, with a single file's inferred schema
+    * served from [[schemas]] while the file is unchanged.
+    */
+  private def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
+    val status =
+      try Some(p.getFileSystem(spark.sessionState.newHadoopConf()).getFileStatus(p))
+      catch { case _: FileNotFoundException => None }
+    status.filter(_.isFile) match {
+      case None => spark.read.parquet(path)
+      case Some(st) =>
+        val key = st.getPath.toString
+        val nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
+        val cached = Option(schemas.get(key)).filter(e =>
+          e.length == st.getLen && e.modified == st.getModificationTime && e.nanosAsLong == nanos)
+        val schema = cached.map(_.schema).getOrElse {
+          val inferred = spark.read.parquet(path).schema
+          schemas.put(key, Inferred(st.getLen, st.getModificationTime, nanos, inferred))
+          inferred
+        }
+        spark.read.schema(schema).parquet(path)
+    }
+  }
 
   /** The harness parquet has shipped timestamps as INT64 TIMESTAMP(NANOS)
     * (which Spark's vectorized reader rejects — read as long nanos via
@@ -28,7 +82,7 @@ object Tables {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     graft.functions.GraftFunctions.ensure(spark) // idempotent; graft_* available everywhere
 
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = readParquet(spark, s"$dir/$name.parquet")
     val tsCols = Map(
       "events" -> Seq("ts"),
       "orders" -> Seq("o_orderdate"),

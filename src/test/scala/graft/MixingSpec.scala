@@ -124,6 +124,17 @@ class MixingSpec extends AnyFunSuite {
       "per-doc share not monotone decreasing in stratum size")
   }
 
+  test("temperature weights fold the total without an unpartitioned window") {
+    // an `over ()` window logs WindowExec's no-partition WARN on every
+    // call; the global aggregate crosses the same one single-partition
+    // exchange after the counts
+    val w = Mixing.temperatureWeights(docs, Seq("source"), 10000.0)
+    w.collect()
+    val plan = w.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
+    assert(!plan.contains("Window"), plan)
+    assert("Exchange SinglePartition".r.findAllMatchIn(plan).size == 1, plan)
+  }
+
   test("interleave key: early sorted prefixes carry each stratum near its weight share") {
     // use the bigger sf0.01 corpus: the share test is statistical
     val corpus = Tables.documents(spark, "/root/testdata/sf0.01")

@@ -384,50 +384,19 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("Pipeline.run on a cached fleet is one job of two stages") {
-    import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
-    import java.util.concurrent.atomic.AtomicInteger
-    import org.apache.spark.scheduler._
     // the raw rows cross ONE shuffle into the site lane, which builds
     // the day rows and solves each site in the same task: a map stage
     // and a result stage, no relational day-row plan in front
     val fleet = graft.sources.Synth.pvFleet(spark, nSites = 4, nDays = 30, slotsPerDay = 24).cache()
     fleet.write.format("noop").mode("overwrite").save()
-    val sc = spark.sparkContext
-    val group = "plan-spec-pipeline-run"
-    val sentinel = "plan-spec-drain"
-    val jobs = new AtomicInteger
-    val stages = new AtomicInteger
-    val sentinelJobs = ConcurrentHashMap.newKeySet[Integer]()
-    val drained = new CountDownLatch(1)
-    def groupOf(p: java.util.Properties): String = Option(p).map(_.getProperty("spark.jobGroup.id")).orNull
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = groupOf(e.properties) match {
-        case `group` => jobs.incrementAndGet()
-        case `sentinel` => sentinelJobs.add(e.jobId)
-        case _ =>
-      }
-      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-        if (groupOf(e.properties) == group) stages.incrementAndGet()
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (sentinelJobs.contains(e.jobId)) drained.countDown()
-    }
-    sc.addSparkListener(listener)
     try {
-      sc.setJobGroup(group, "Pipeline.run")
-      graft.analyses.Pipeline.run(spark, fleet, "site", "ts", "power").toDF()
-        .write.format("noop").mode("overwrite").save()
-      // listener events arrive in order: once the sentinel job's end is
-      // delivered, so is every event of the run before it
-      sc.setJobGroup(sentinel, "listener drain")
-      sc.parallelize(1 to 1, 1).count()
-      assert(drained.await(60, TimeUnit.SECONDS), "listener bus did not drain")
-      assert(jobs.get == 1, s"Pipeline.run ran ${jobs.get} jobs")
-      assert(stages.get == 2, s"Pipeline.run ran ${stages.get} stages")
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-      fleet.unpersist()
-    }
+      val c = JobCounter.during(spark, "Pipeline.run") {
+        graft.analyses.Pipeline.run(spark, fleet, "site", "ts", "power").toDF()
+          .write.format("noop").mode("overwrite").save()
+      }
+      assert(c.jobs == 1, s"Pipeline.run ran ${c.jobs} jobs")
+      assert(c.stages == 2, s"Pipeline.run ran ${c.stages} stages")
+    } finally fleet.unpersist()
   }
 
   test("fleet batch-estimation joins stay broadcast-shaped: resume anti-join + metadata dim (q99)") {
