@@ -1187,9 +1187,9 @@ object OracleSql {
     FROM und GROUP BY 1, 2
   """
 
-  // q100: the Sandia/pvlib ephemeris chain (Solar.withEphemerisPosition)
-  // replayed term-for-term: staged CTEs mirror the staged Spark
-  // projections (Kepler as 5 chained REPLACEs), pmod as the
+  // q100: the Sandia/pvlib ephemeris (Solar.ephemerisPosition, the
+  // native graft_solar_position) replayed term-for-term: staged CTEs
+  // follow the expression's steps (Kepler as 5 chained REPLACEs), pmod as the
   // double-fmod composition (Java % on doubles IS IEEE fmod, so the
   // composition is bit-identical cross-engine), second() floored to
   // mirror Spark's integer truncation on the microsecond stamps.

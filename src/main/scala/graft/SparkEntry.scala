@@ -842,12 +842,13 @@ object SparkEntry {
   }
 
   /** The Sandia/pvlib ephemeris itself ([[graft.functions.Solar
-    * .withEphemerisPosition]] — the SPA-parity solar-position chain
-    * behind the polar tables) HASH-GATED cross-engine: every event
-    * timestamp's (elevation, azimuth) at a fixed site, the full
-    * ~15-level chain (sidereal time, Kepler 5-step unroll, ecliptic
-    * longitude, declination, hour-angle wrap, both azimuth halves)
-    * replayed term-for-term in DuckDB. Outputs lift to 1e-4-degree
+    * .ephemerisPosition]], the native `graft_solar_position`
+    * expression — the SPA-parity solar position behind the polar
+    * tables) HASH-GATED cross-engine: every event timestamp's
+    * (elevation, azimuth) at a fixed site, every step of the algorithm
+    * (sidereal time, Kepler 5-step unroll, ecliptic longitude,
+    * declination, hour-angle wrap, both azimuth halves) replayed
+    * term-for-term in DuckDB. Outputs lift to 1e-4-degree
     * integer units via the representation-free floor(x·1e4 + 0.5):
     * probed cross-engine agreement on the raw doubles is ~1e-11
     * (libm + op-order ulps through the transcendental chain), so the
@@ -858,12 +859,11 @@ object SparkEntry {
     * bits); the micro-lift idiom is the q61 contract.
     */
   private def q100(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(s, dir).select(col("event_id"), col("ts"))
-    graft.functions.Solar
-      .withEphemerisPosition(ev, col("ts"), 37.5, -122.0, "el", "az")
+    Tables.events(s, dir)
+      .select(col("event_id"), graft.functions.Solar.ephemerisPosition(col("ts"), 37.5, -122.0).as("pos"))
       .select(col("event_id"),
-        floor(col("el") * lit(1e4) + lit(0.5)).cast("long").as("el_tmil"),
-        floor(col("az") * lit(1e4) + lit(0.5)).cast("long").as("az_tmil"))
+        floor(col("pos.el") * lit(1e4) + lit(0.5)).cast("long").as("el_tmil"),
+        floor(col("pos.az") * lit(1e4) + lit(0.5)).cast("long").as("az_tmil"))
   }
 
   /** The longitude study's FILLED-matrix slice (the data_matrix axis
@@ -1008,7 +1008,7 @@ object SparkEntry {
     * `quantileFourierFitMultiTaus`; reference
     * `algorithms/quantile_estimation.py:62-94`), HASH-GATED on
     * literal series: exact-rational inputs with NaN gaps, the REAL
-    * solver in `flatMapGroups`, and an oracle that replays every IRLS
+    * solver run on the driver, and an oracle that replays every IRLS
     * step — pinball weights g/max(|r|, 1e-6), the 1e-9-ridged normal
     * equations, a 3×3 Cramer solve — with a DuckDB RECURSIVE CTE
     * carrying β across the 30 iterations. The Scala kernel stops early
@@ -1018,23 +1018,16 @@ object SparkEntry {
     * inside the 6-dp rounding, not a step-for-step replay.
     */
   private def q72(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val rows = for (sid <- 1 to 3; i <- 0 until 48) yield {
-      val y =
+    val rows = (1 to 3).flatMap { sid =>
+      val y = Array.tabulate(48)(i =>
         if (i % 19 == 7) Double.NaN
-        else 6.0 + 2.0 * sid + ((i * 31 + sid * 17) % 23 - 11) / 4.0
-      (sid.toLong, i.toLong, y)
+        else 6.0 + 2.0 * sid + ((i * 31 + sid * 17) % 23 - 11) / 4.0)
+      val fit = graft.solvers.Kernels.quantileFourierFit(
+        y, Array.tabulate(48)(_.toDouble), tau = 0.7,
+        harmonics = 1, period = 48.0, iters = 30)
+      fit.indices.map(i => (sid.toLong, i.toLong, fit(i)))
     }
-    s.createDataset(rows)
-      .groupByKey(_._1)
-      .flatMapGroups { (sid: Long, it: Iterator[(Long, Long, Double)]) =>
-        val pts = it.toArray.sortBy(_._2)
-        val fit = graft.solvers.Kernels.quantileFourierFit(
-          pts.map(_._3), pts.map(_._2.toDouble), tau = 0.7,
-          harmonics = 1, period = 48.0, iters = 30)
-        pts.indices.iterator.map(k => (sid, pts(k)._2, fit(k)))
-      }
-      .toDF("series_id", "i", "fit")
+    s.createDataFrame(rows).toDF("series_id", "i", "fit")
       .withColumn("fit", round(col("fit") * lit(1e6)) / lit(1e6))
   }
 
@@ -1042,8 +1035,8 @@ object SparkEntry {
     * shade decomposition (`Kernels.topEigen`, SURVEY §2.8 Shade SD —
     * p04's eigen stage; q53 gates the Gram build, q57 the projection
     * arithmetic, and this gates the solver BETWEEN them), HASH-GATED
-    * on a literal integer Gram matrix: the REAL operator in
-    * `flatMapGroups`, and an oracle that replays the deterministic
+    * on a literal integer Gram matrix: the REAL operator run on the
+    * driver, and an oracle that replays the deterministic
     * `1 + diag` start, every matvec/normalize step (the operator's
     * exact left-to-right summation order), the 1e-18 convergence
     * exit, and the rank-one deflation between components with a
@@ -1059,23 +1052,16 @@ object SparkEntry {
     * the arithmetic it pins (the d29/e09 calibration-note pattern).
     */
   private def q73(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
     val bRows = Seq(
       Seq(4.0, 1.0, 0.0, 2.0), Seq(1.0, 3.0, 1.0, 0.0),
       Seq(0.0, 2.0, 5.0, 1.0), Seq(2.0, 0.0, 1.0, 3.0),
       Seq(1.0, 1.0, 0.0, 4.0))
-    s.createDataset(Seq(1))
-      .groupByKey(identity)
-      .flatMapGroups { (_: Int, _: Iterator[Int]) =>
-        val g = Array.tabulate(4, 4)((i, j) => bRows.map(r => r(i) * r(j)).sum)
-        graft.solvers.Kernels.topEigen(g, k = 2).iterator.zipWithIndex.flatMap {
-          case ((lambda, v), c) =>
-            v.iterator.zipWithIndex.map { case (vi, idx) =>
-              ((c + 1).toLong, (idx + 1).toLong, vi, lambda)
-            }
-        }
-      }
-      .toDF("comp", "idx", "v", "lambda")
+    val g = Array.tabulate(4, 4)((i, j) => bRows.map(r => r(i) * r(j)).sum)
+    val rows = graft.solvers.Kernels.topEigen(g, k = 2).toSeq.zipWithIndex.flatMap {
+      case ((lambda, v), c) =>
+        v.toSeq.zipWithIndex.map { case (vi, idx) => ((c + 1).toLong, (idx + 1).toLong, vi, lambda) }
+    }
+    s.createDataFrame(rows).toDF("comp", "idx", "v", "lambda")
       .withColumn("v", round(col("v"), 6))
       .withColumn("lambda", round(col("lambda"), 6))
   }
@@ -1093,16 +1079,11 @@ object SparkEntry {
     * stream is bit-identical cross-engine.
     */
   private def q74(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    s.createDataset(Seq(42L, 20240815L))
-      .groupByKey(identity)
-      .flatMapGroups { (seed: Long, _: Iterator[Long]) =>
-        graft.solvers.Kernels.mcDrawStream(seed, n = 24, fractionHold = 0.25, k = 5)
-          .iterator.map { case (samp, tau, stf, keep) =>
-            (seed, samp.toLong, tau, stf, keep.mkString(","))
-          }
-      }
-      .toDF("seed", "sample", "tau", "stiffness", "keep_csv")
+    val rows = Seq(42L, 20240815L).flatMap { seed =>
+      graft.solvers.Kernels.mcDrawStream(seed, n = 24, fractionHold = 0.25, k = 5)
+        .map { case (samp, tau, stf, keep) => (seed, samp.toLong, tau, stf, keep.mkString(",")) }
+    }
+    s.createDataFrame(rows).toDF("seed", "sample", "tau", "stiffness", "keep_csv")
       .withColumn("tau", round(col("tau"), 6))
       .withColumn("stiffness", round(col("stiffness"), 6))
   }
@@ -1120,20 +1101,14 @@ object SparkEntry {
     * order, so the replay is bit-identical cross-engine.
     */
   private def q77(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    s.createDataset(Seq(1))
-      .groupByKey(identity)
-      .flatMapGroups { (_: Int, _: Iterator[Int]) =>
-        val n = 12
-        val band = Array(
-          Array.tabulate(n)(j => (60.0 + (j * 7) % 5) / 8.0),
-          Array.tabulate(n)(j => (-16.0 + (j * 3) % 4) / 8.0),
-          Array.tabulate(n)(j => (4.0 + (j * 5) % 3) / 8.0))
-        val b = Array.tabulate(n)(j => ((j * 11) % 13 - 6) / 4.0)
-        val x = graft.solvers.Linalg.solveBandedSpd(band, b)
-        x.iterator.zipWithIndex.map { case (v, i) => (i.toLong, v) }
-      }
-      .toDF("i", "x")
+    val n = 12
+    val band = Array(
+      Array.tabulate(n)(j => (60.0 + (j * 7) % 5) / 8.0),
+      Array.tabulate(n)(j => (-16.0 + (j * 3) % 4) / 8.0),
+      Array.tabulate(n)(j => (4.0 + (j * 5) % 3) / 8.0))
+    val b = Array.tabulate(n)(j => ((j * 11) % 13 - 6) / 4.0)
+    val x = graft.solvers.Linalg.solveBandedSpd(band, b)
+    s.createDataFrame(x.indices.map(i => (i.toLong, x(i)))).toDF("i", "x")
       .withColumn("x", round(col("x"), 6))
   }
 
@@ -1199,16 +1174,13 @@ object SparkEntry {
     * at ulp scale — five orders inside the 6-dp hash grid.
     */
   private def q80(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val series: Map[Int, Array[Double]] = Map(
+    val series = Seq(
       1 -> Array(1.0, 2.5, -3.25, 40.0, 2.0, 1.75, -0.5, 100.0, 3.0, 2.25, 1.5),
       2 -> Array(10.0, 12.0, 11.5, 9.75, 10.25, 10.5, 11.0),
       3 -> Array(-5.0, 120.0, -4.5, -130.0, -5.25, -4.75, -5.5, 200.0, -6.0))
-    s.createDataset(series.keys.toSeq)
-      .groupByKey(identity)
-      .flatMapGroups { (sid: Int, _: Iterator[Int]) =>
-        Iterator((sid.toLong, graft.analyses.Study.huberLocation(series(sid), 15.0)))
-      }
+    s.createDataFrame(series.map { case (sid, y) =>
+        (sid.toLong, graft.analyses.Study.huberLocation(y, 15.0))
+      })
       .toDF("series_id", "huber")
       .withColumn("huber", round(col("huber"), 6))
   }
@@ -1217,7 +1189,7 @@ object SparkEntry {
     * (`Kernels.seasonalQuantileTrend` — the reference's
     * `find_daytime_threshold_quantile_seasonality`,
     * `daytime_threshold_quantile.py:23-39`), HASH-GATED on a literal
-    * series at iters = 2: the REAL operator in `flatMapGroups`, and
+    * series at iters = 2: the REAL operator run on the driver, and
     * an oracle that composes the q72 and q77 idioms — per IRLS
     * iteration a weight CTE (the exact pinball g/max(|r|, 1e-6)
     * arithmetic off the previous solution) feeds a banded-Cholesky
@@ -1227,15 +1199,9 @@ object SparkEntry {
     * cross-engine.
     */
   private def q81(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    s.createDataset(Seq(1))
-      .groupByKey(identity)
-      .flatMapGroups { (_: Int, _: Iterator[Int]) =>
-        val y = Array(2.0, 2.5, 3.25, 4.0, 4.5, 12.0, 4.25, 3.5, 2.75, 2.25)
-        val x = graft.solvers.Kernels.seasonalQuantileTrend(y, p1 = 0.75, iters = 2)
-        x.iterator.zipWithIndex.map { case (v, i) => (i.toLong, v) }
-      }
-      .toDF("i", "x")
+    val y = Array(2.0, 2.5, 3.25, 4.0, 4.5, 12.0, 4.25, 3.5, 2.75, 2.25)
+    val x = graft.solvers.Kernels.seasonalQuantileTrend(y, p1 = 0.75, iters = 2)
+    s.createDataFrame(x.indices.map(i => (i.toLong, x(i)))).toDF("i", "x")
       .withColumn("x", round(col("x"), 6))
   }
 
@@ -1433,16 +1399,11 @@ object SparkEntry {
     * generated chained MATERIALIZED CTEs.
     */
   private def q87(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    s.createDataset(Seq(1))
-      .groupByKey(identity)
-      .flatMapGroups { (_: Int, _: Iterator[Int]) =>
-        val y = Array(4.50, 4.20, 3.90, 4.10, 4.42, 4.12,
-          3.80, Double.NaN, 4.30, 4.00, 3.66, 3.86)
-        val (x1, x2, x3, x4, x5) = graft.solvers.Kernels.pvproDecompose5(
-          y, 4, model = "monotonic", lambda2 = 0.01, lambda4 = 0.05, rounds = 2)
-        (0 until 12).iterator.map(i => (i.toLong, x1(i), x2(i), x3(i), x4(i), x5(i)))
-      }
+    val y = Array(4.50, 4.20, 3.90, 4.10, 4.42, 4.12,
+      3.80, Double.NaN, 4.30, 4.00, 3.66, 3.86)
+    val (x1, x2, x3, x4, x5) = graft.solvers.Kernels.pvproDecompose5(
+      y, 4, model = "monotonic", lambda2 = 0.01, lambda4 = 0.05, rounds = 2)
+    s.createDataFrame((0 until 12).map(i => (i.toLong, x1(i), x2(i), x3(i), x4(i), x5(i))))
       .toDF("i", "x1", "x2", "x3", "x4", "x5")
       .select(col("i"), round(col("x1"), 6).as("x1"), round(col("x2"), 6).as("x2"),
         round(col("x3"), 6).as("x3"), round(col("x4"), 6).as("x4"),
@@ -1480,8 +1441,8 @@ object SparkEntry {
   /** PVPro's alternating trend/seasonal decomposition
     * (`Kernels.pvproDecompose` — p05's solver core; reference
     * `pvpro_post_processing.py:270-441`), HASH-GATED on a literal
-    * series at `harmonics = 1`: the REAL operator in
-    * `flatMapGroups`, and an oracle that replays all 5 alternation
+    * series at `harmonics = 1`: the REAL operator run on the
+    * driver, and an oracle that replays all 5 alternation
     * rounds — the zero-mean Fourier LS fit (2×2 Cramer on the ridged
     * normal equations) and the monotone non-increasing PAVA step via
     * its minimax identity (the q59 idiom: trend_i = min_{a≤i}
@@ -1490,18 +1451,10 @@ object SparkEntry {
     * float paths agree far inside the 6-dp rounding.
     */
   private def q75(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val rows = for (i <- 0 until 20) yield
-      (i.toLong, 12.0 - 0.4 * i + ((i * 37) % 11 - 5) / 3.0)
-    s.createDataset(rows)
-      .groupByKey(_ => 1)
-      .flatMapGroups { (_: Int, it: Iterator[(Long, Double)]) =>
-        val pts = it.toArray.sortBy(_._1)
-        val (trend, seasonal) = graft.solvers.Kernels.pvproDecompose(
-          pts.map(_._2), pts.map(_._1.toDouble), harmonics = 1,
-          period = 10.0, rounds = 5)
-        pts.indices.iterator.map(k => (pts(k)._1, trend(k), seasonal(k)))
-      }
+    val y = Array.tabulate(20)(i => 12.0 - 0.4 * i + ((i * 37) % 11 - 5) / 3.0)
+    val (trend, seasonal) = graft.solvers.Kernels.pvproDecompose(
+      y, Array.tabulate(20)(_.toDouble), harmonics = 1, period = 10.0, rounds = 5)
+    s.createDataFrame(y.indices.map(i => (i.toLong, trend(i), seasonal(i))))
       .toDF("i", "trend", "seasonal")
       .withColumn("trend", round(col("trend"), 6))
       .withColumn("seasonal", round(col("seasonal"), 6))
@@ -1519,19 +1472,10 @@ object SparkEntry {
     * differing float paths agree far inside the 6-dp rounding.
     */
   private def q76(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val rows = for (i <- 0 until 24) yield
-      (i.toLong, (200.0 - 2.0 * i + ((i * 53) % 17 - 8)) / 10.0)
-    s.createDataset(rows)
-      .groupByKey(_ => 1)
-      .flatMapGroups { (_: Int, it: Iterator[(Long, Double)]) =>
-        val pts = it.toArray.sortBy(_._1)
-        val (rate, _, beta) = graft.solvers.Kernels.soilingRateFit(
-          pts.map(_._2), pts.map(_._1.toDouble), tau = 0.9,
-          harmonics = 0, irlsTol = 1e-10)
-        Iterator((0L, beta(0)), (1L, beta(1)), (2L, rate))
-      }
-      .toDF("coef", "value")
+    val (rate, _, beta) = graft.solvers.Kernels.soilingRateFit(
+      Array.tabulate(24)(i => (200.0 - 2.0 * i + ((i * 53) % 17 - 8)) / 10.0),
+      Array.tabulate(24)(_.toDouble), tau = 0.9, harmonics = 0, irlsTol = 1e-10)
+    s.createDataFrame(Seq((0L, beta(0)), (1L, beta(1)), (2L, rate))).toDF("coef", "value")
       .withColumn("value", round(col("value"), 6))
   }
 
@@ -1539,32 +1483,24 @@ object SparkEntry {
     * §2.7 — reference clear-sky DP), HASH-GATED on deterministic
     * literal series (the e15/e22 fixed-state idiom for trained/solver
     * paths): exact-rational inputs with NaN gaps, the REAL operator
-    * in `mapGroups`, and an oracle that replays the min-sum forward
+    * run on the driver, and an oracle that replays the min-sum forward
     * recursion and the backtrack with DuckDB RECURSIVE CTEs. The
     * arithmetic is order-pinned by the DP itself (sequential
     * accumulation), so the costs are bit-identical cross-engine.
     */
   private def q68(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
     // a near-1 block in [20, 39] (clear-favored emissions) inside
     // noisy cloud-favored surroundings, plus NaN gaps — the path must
     // enter AND leave the clear state so the gate exercises both
     // transitions and the backtrack, not a constant answer
-    val rows = for (sid <- 1 to 4; i <- 0 until 60) yield {
-      val r =
+    val rows = (1 to 4).flatMap { sid =>
+      val clear = graft.solvers.Kernels.viterbi2(Array.tabulate(60)(i =>
         if (i % 17 == 3) Double.NaN
         else if (i >= 20 && i <= 39) 1.0 + ((i * sid * 7) % 11 - 5) / 100.0
-        else ((i * sid * 37 + i * 13) % 97) / 48.0
-      (sid.toLong, i.toLong, r)
+        else ((i * sid * 37 + i * 13) % 97) / 48.0))
+      clear.indices.map(i => (sid.toLong, i.toLong, clear(i)))
     }
-    s.createDataset(rows)
-      .groupByKey(_._1)
-      .flatMapGroups { (sid: Long, it: Iterator[(Long, Long, Double)]) =>
-        val pts = it.toArray.sortBy(_._2)
-        val clear = graft.solvers.Kernels.viterbi2(pts.map(_._3))
-        pts.indices.iterator.map(k => (sid, pts(k)._2, clear(k)))
-      }
-      .toDF("series_id", "i", "clear")
+    s.createDataFrame(rows).toDF("series_id", "i", "clear")
   }
 
   /** Day-quality DBSCAN clustering (reference

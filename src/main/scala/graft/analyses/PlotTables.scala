@@ -559,7 +559,7 @@ object PlotTables {
     * them.
     */
   /** @param positionAlgo `"ephemeris"` (default — the published
-    *   Sandia/pvlib ephemeris, [[graft.functions.Solar.withEphemerisPosition]],
+    *   Sandia/pvlib ephemeris, [[graft.functions.Solar.ephemerisPosition]],
     *   SPA parity to ~0.01°, matching the reference's pvlib
     *   `get_solarposition` binding at `polar_transform.py:69-78`) or
     *   `"cooper"` (the Cooper-declination + Spencer-EoT approximation
@@ -590,8 +590,8 @@ object PlotTables {
         // the reference shifts its naive fixed-offset local stamps to
         // UTC before calling pvlib (`polar_transform.py:69-72`)
         val utcTs = timestamp_seconds(unix_timestamp(col(tsCol)) - lit(tzOffset * 3600L))
-        val a = Solar.withEphemerisPosition(base, utcTs, latDeg, lonDeg, "__pos_el", "__pos_az")
-        (a, col("__pos_el"), col("__pos_az"))
+        (base.withColumn("__pos", Solar.ephemerisPosition(utcTs, latDeg, lonDeg)),
+          col("__pos.el"), col("__pos.az"))
       case "cooper" =>
         val sinPhi = math.sin(latDeg * DegToRad)
         val cosPhi = math.cos(latDeg * DegToRad)

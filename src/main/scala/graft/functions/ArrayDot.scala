@@ -1,9 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Cast, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
+import org.apache.spark.sql.types.{DataType, DoubleType}
 
 /** Native Catalyst expression: dot product of two `array<double>`
   * columns — the hot inner loop of every embedding-similarity operator
@@ -112,11 +112,4 @@ case class ArrayDist2(left: Expression, right: Expression) extends BinaryExpress
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-object ArrayDot {
-  def buildDot(exprs: Seq[Expression]): Expression =
-    ArrayDot(Cast(exprs(0), ArrayType(DoubleType)), Cast(exprs(1), ArrayType(DoubleType)))
-  def buildDist2(exprs: Seq[Expression]): Expression =
-    ArrayDist2(Cast(exprs(0), ArrayType(DoubleType)), Cast(exprs(1), ArrayType(DoubleType)))
 }

@@ -1,9 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Cast, Expression}
-import org.apache.spark.sql.types.{DataType, DoubleType}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Cast, Expression, ExpressionInfo}
+import org.apache.spark.sql.types._
 
 /** Native Catalyst expression: round `x` to the nearest multiple of
   * `base` with HALF_UP ties (the reference's round-to-arbitrary-base
@@ -46,14 +47,42 @@ case class RoundToBase(left: Expression, right: Expression) extends BinaryExpres
 /** Registration of graft's native expressions into a session's
   * function registry (per-session, idempotent) — usable from SQL and
   * `expr(...)` without `SparkSessionExtensions` wiring, and from a
-  * `withExtensions` builder via [[GraftExtensions]].
+  * `withExtensions` builder via [[GraftExtensions]]. Both read the one
+  * table, [[Natives]].
   */
 object GraftFunctions {
-  /** Builder with explicit double casts (keeps the expression itself
+  private def str(e: Expression) = Cast(e, StringType)
+  private def int(e: Expression) = Cast(e, IntegerType)
+  private def dbl(e: Expression) = Cast(e, DoubleType)
+  private def dblArr(e: Expression) = Cast(e, ArrayType(DoubleType))
+
+  /** Every native function: SQL name, expression class, builder. The
+    * builders cast their arguments explicitly (keeps each expression
     * monomorphic — SQL decimal/int literals are welcome).
     */
-  def build(exprs: Seq[Expression]): Expression =
-    RoundToBase(Cast(exprs(0), DoubleType), Cast(exprs(1), DoubleType))
+  val Natives: Seq[(String, Class[_ <: Expression], Seq[Expression] => Expression)] = Seq(
+    ("graft_round_to_base", classOf[RoundToBase], e => RoundToBase(dbl(e(0)), dbl(e(1)))),
+    ("graft_dot", classOf[ArrayDot], e => ArrayDot(dblArr(e(0)), dblArr(e(1)))),
+    ("graft_dist2", classOf[ArrayDist2], e => ArrayDist2(dblArr(e(0)), dblArr(e(1)))),
+    ("graft_rolling_hashes", classOf[RollingHashes], e => RollingHashes(str(e(0)), int(e(1)))),
+    ("graft_bloom_contains", classOf[BloomContains],
+      e => BloomContains(Cast(e(0), BinaryType), Cast(e(1), LongType))),
+    ("graft_deflate_ratio", classOf[DeflateRatio], e => DeflateRatio(str(e(0)))),
+    ("graft_lsh_band_sigs", classOf[LshBandSigs],
+      e => LshBandSigs(str(e(0)), int(e(1)), int(e(2)), int(e(3)))),
+    ("graft_barrier", classOf[graft.plans.PredicateBarrier],
+      e => graft.plans.PredicateBarrier(Cast(e(0), BooleanType))),
+    ("graft_dup_ngram_frac", classOf[DupNgramFrac], e => DupNgramFrac(str(e(0)), int(e(1)))),
+    ("graft_stopword_ratio", classOf[StopwordRatio], e => StopwordRatio(str(e(0)))),
+    ("graft_alpha_word_frac", classOf[AlphaWordFrac], e => AlphaWordFrac(str(e(0)))),
+    ("graft_rolling_minhash_sig", classOf[RollingMinhashSig],
+      e => RollingMinhashSig(str(e(0)), int(e(1)), int(e(2)))),
+    ("graft_double_order_bits", classOf[DoubleOrderBits], e => DoubleOrderBits(dbl(e(0)))),
+    ("graft_winnow_mins", classOf[WinnowMins], e => WinnowMins(str(e(0)), int(e(1)), int(e(2)))),
+    // a TIMESTAMP_NTZ stays NTZ: its fields read as wall-clock time
+    ("graft_solar_position", classOf[SolarPosition], e => SolarPosition(
+      if (e(0).dataType == TimestampNTZType) e(0) else Cast(e(0), TimestampType), dbl(e(1)), dbl(e(2))))
+  )
 
   // sessions already registered (weak keys: a stopped session must not
   // be pinned by the guard) — lets library Column builders call
@@ -78,217 +107,20 @@ object GraftFunctions {
 
   def register(spark: SparkSession): Unit = {
     registered.put(spark, java.lang.Boolean.TRUE)
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_round_to_base",
-      build,
-      "built-in"
-    )
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot",
-      ArrayDot.buildDot,
-      "built-in"
-    )
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dist2",
-      ArrayDot.buildDist2,
-      "built-in"
-    )
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_rolling_hashes",
-      buildRollingHashes,
-      "built-in"
-    )
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_contains",
-      buildBloomContains,
-      "built-in"
-    )
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_deflate_ratio",
-      buildDeflateRatio,
-      "built-in"
-    )
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_lsh_band_sigs",
-      buildLshBandSigs,
-      "built-in"
-    )
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_barrier",
-      buildBarrier,
-      "built-in"
-    )
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dup_ngram_frac",
-      buildDupNgramFrac,
-      "built-in"
-    )
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_stopword_ratio",
-      buildStopwordRatio,
-      "built-in"
-    )
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_alpha_word_frac",
-      buildAlphaWordFrac,
-      "built-in"
-    )
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_rolling_minhash_sig",
-      buildRollingMinhashSig,
-      "built-in"
-    )
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_double_order_bits",
-      buildDoubleOrderBits,
-      "built-in"
-    )
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_winnow_mins",
-      buildWinnowMins,
-      "built-in"
-    )
+    Natives.foreach { case (name, _, builder) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, builder, "built-in")
+    }
   }
-
-  def buildDoubleOrderBits(exprs: Seq[Expression]): Expression =
-    DoubleOrderBits(Cast(exprs(0), DoubleType))
-
-  def buildRollingHashes(exprs: Seq[Expression]): Expression =
-    RollingHashes(
-      Cast(exprs(0), org.apache.spark.sql.types.StringType),
-      Cast(exprs(1), org.apache.spark.sql.types.IntegerType))
-
-  def buildBloomContains(exprs: Seq[Expression]): Expression =
-    BloomContains(
-      Cast(exprs(0), org.apache.spark.sql.types.BinaryType),
-      Cast(exprs(1), org.apache.spark.sql.types.LongType))
-
-  def buildDeflateRatio(exprs: Seq[Expression]): Expression =
-    DeflateRatio(Cast(exprs(0), org.apache.spark.sql.types.StringType))
-
-  def buildLshBandSigs(exprs: Seq[Expression]): Expression =
-    LshBandSigs(
-      Cast(exprs(0), org.apache.spark.sql.types.StringType),
-      Cast(exprs(1), org.apache.spark.sql.types.IntegerType),
-      Cast(exprs(2), org.apache.spark.sql.types.IntegerType),
-      Cast(exprs(3), org.apache.spark.sql.types.IntegerType))
-
-  def buildBarrier(exprs: Seq[Expression]): Expression =
-    graft.plans.PredicateBarrier(Cast(exprs(0), org.apache.spark.sql.types.BooleanType))
-
-  def buildDupNgramFrac(exprs: Seq[Expression]): Expression =
-    DupNgramFrac(
-      Cast(exprs(0), org.apache.spark.sql.types.StringType),
-      Cast(exprs(1), org.apache.spark.sql.types.IntegerType))
-
-  def buildStopwordRatio(exprs: Seq[Expression]): Expression =
-    StopwordRatio(Cast(exprs(0), org.apache.spark.sql.types.StringType))
-
-  def buildAlphaWordFrac(exprs: Seq[Expression]): Expression =
-    AlphaWordFrac(Cast(exprs(0), org.apache.spark.sql.types.StringType))
-
-  def buildRollingMinhashSig(exprs: Seq[Expression]): Expression =
-    RollingMinhashSig(
-      Cast(exprs(0), org.apache.spark.sql.types.StringType),
-      Cast(exprs(1), org.apache.spark.sql.types.IntegerType),
-      Cast(exprs(2), org.apache.spark.sql.types.IntegerType))
-
-  def buildWinnowMins(exprs: Seq[Expression]): Expression =
-    WinnowMins(
-      Cast(exprs(0), org.apache.spark.sql.types.StringType),
-      Cast(exprs(1), org.apache.spark.sql.types.IntegerType),
-      Cast(exprs(2), org.apache.spark.sql.types.IntegerType))
 }
 
 /** `SparkSessionExtensions` hook: `.withExtensions(new GraftExtensions)`
   * or `spark.sql.extensions=graft.functions.GraftExtensions`.
   */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    e.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("graft_round_to_base"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[RoundToBase].getName, "graft_round_to_base"),
-        (exprs: Seq[Expression]) => GraftFunctions.build(exprs))
-    )
-    e.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("graft_dot"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[ArrayDot].getName, "graft_dot"),
-        (exprs: Seq[Expression]) => ArrayDot.buildDot(exprs))
-    )
-    e.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("graft_dist2"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[ArrayDist2].getName, "graft_dist2"),
-        (exprs: Seq[Expression]) => ArrayDot.buildDist2(exprs))
-    )
-    e.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("graft_rolling_hashes"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[RollingHashes].getName, "graft_rolling_hashes"),
-        (exprs: Seq[Expression]) => GraftFunctions.buildRollingHashes(exprs))
-    )
-    e.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("graft_bloom_contains"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[BloomContains].getName, "graft_bloom_contains"),
-        (exprs: Seq[Expression]) => GraftFunctions.buildBloomContains(exprs))
-    )
-    e.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("graft_deflate_ratio"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[DeflateRatio].getName, "graft_deflate_ratio"),
-        (exprs: Seq[Expression]) => GraftFunctions.buildDeflateRatio(exprs))
-    )
-    e.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("graft_lsh_band_sigs"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[LshBandSigs].getName, "graft_lsh_band_sigs"),
-        (exprs: Seq[Expression]) => GraftFunctions.buildLshBandSigs(exprs))
-    )
-    e.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("graft_barrier"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[graft.plans.PredicateBarrier].getName, "graft_barrier"),
-        (exprs: Seq[Expression]) => GraftFunctions.buildBarrier(exprs))
-    )
-    e.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("graft_dup_ngram_frac"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[DupNgramFrac].getName, "graft_dup_ngram_frac"),
-        (exprs: Seq[Expression]) => GraftFunctions.buildDupNgramFrac(exprs))
-    )
-    e.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("graft_stopword_ratio"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[StopwordRatio].getName, "graft_stopword_ratio"),
-        (exprs: Seq[Expression]) => GraftFunctions.buildStopwordRatio(exprs))
-    )
-    e.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("graft_alpha_word_frac"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[AlphaWordFrac].getName, "graft_alpha_word_frac"),
-        (exprs: Seq[Expression]) => GraftFunctions.buildAlphaWordFrac(exprs))
-    )
-    e.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("graft_rolling_minhash_sig"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[RollingMinhashSig].getName, "graft_rolling_minhash_sig"),
-        (exprs: Seq[Expression]) => GraftFunctions.buildRollingMinhashSig(exprs))
-    )
-    e.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("graft_double_order_bits"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[DoubleOrderBits].getName, "graft_double_order_bits"),
-        (exprs: Seq[Expression]) => GraftFunctions.buildDoubleOrderBits(exprs))
-    )
-    e.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("graft_winnow_mins"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[WinnowMins].getName, "graft_winnow_mins"),
-        (exprs: Seq[Expression]) => GraftFunctions.buildWinnowMins(exprs))
-    )
+class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  override def apply(e: SparkSessionExtensions): Unit = {
+    GraftFunctions.Natives.foreach { case (name, cls, builder) =>
+      e.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder))
+    }
     // nearest-ts range joins written naively become bucketed equi-joins
     e.injectOptimizerRule(_ => graft.plans.RangeJoinRule)
     // naive point-in-interval band joins become the IntervalJoin plan

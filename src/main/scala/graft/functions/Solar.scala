@@ -3,8 +3,9 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Solar-geometry scalar functions as pure column expressions (all
-  * codegen'd built-ins — no UDFs).
+/** Solar-geometry scalar functions as column expressions: Spark
+  * built-ins, plus the native `graft_solar_position` expression for the
+  * ephemeris position ([[ephemerisPosition]]) — no UDFs.
   *
   * Formulas follow the public Cooper/Spencer equations used by the
   * reference (`pvsystemprofiler/utilities/declination_equation.py:4-32`,
@@ -84,126 +85,35 @@ object Solar {
     lit(2.0 / 15.0) * acos(clamped) * lit(RadToDeg)
   }
 
-  /** Sun position (true elevation + azimuth, degrees) from the
-    * published Sandia "Ephemeris" algorithm (Grover Hughes, EPHEM /
-    * SAND85-0273 — the algorithm behind pvlib
-    * `solarposition.ephemeris`), from built-in column expressions
-    * over staged projections (no UDFs). This is
-    * the SPA-parity path for the reference's polar transform
-    * (`polar_transform.py:69-78` binds pvlib `get_solarposition`):
-    * against the NREL SPA it agrees to ~0.01° over 1950–2050, vs the
-    * ~0.1–0.3° of the Cooper-declination + Spencer-EoT approximation
-    * ([[declinationDeg]]/[[equationOfTimeMin]]) — the residual that
-    * could move a borderline sample one bin in the polar tables.
+  /** Sun position by the published Sandia "Ephemeris" algorithm
+    * (Grover Hughes, EPHEM / SAND85-0273, the algorithm behind pvlib
+    * `solarposition.ephemeris`): one native expression,
+    * `graft_solar_position` ([[SolarPosition]]), returning
+    * `struct<el, az>`. This is the SPA-parity path for the reference's
+    * polar transform (`polar_transform.py:69-78` binds pvlib
+    * `get_solarposition`): against the NREL SPA it agrees to ~0.01°
+    * over 1950–2050, vs the ~0.1–0.3° of the Cooper-declination +
+    * Spencer-EoT approximation ([[declinationDeg]]/[[equationOfTimeMin]])
+    * — the residual that could move a borderline sample one bin in the
+    * polar tables.
     *
-    * Kepler's equation is solved by five unrolled fixed-point
-    * iterations E ← M + deg(e)·sin(E) — with e ≈ 0.0167 the error
-    * contracts by ~e per step, so five steps land ~1e-9°, far inside
-    * pvlib's own 1e-5° exit tolerance.
-    *
-    * Shape note: this is deliberately a DATAFRAME transform, not a
-    * single struct Column. The algorithm's intermediates (obliquity,
-    * declination, hour angle, the Kepler chain) are each consumed
-    * several times downstream; inlined into one expression tree the
-    * duplication compounds down the ~15-level chain into a tree whose
-    * whole-stage codegen exceeds Janino's 64 KB method limit and
-    * whose compilation attempt alone OOM'd an 8 GB JVM (round 13,
-    * caught by the full test suite). Staged `withColumn` projections
-    * keep every multiply-used quantity a concrete attribute —
-    * CollapseProject's cost guard refuses to inline a non-cheap alias
-    * referenced more than once, so each evaluates exactly once per
-    * row and the generated code stays linear in the formula count.
+    * Project the struct once (`withColumn`/`select ... as`) and read
+    * `el`/`az` from the projected column: Catalyst keeps a projected
+    * non-cheap expression that is read more than once as one
+    * evaluation, but a filter on it is still pushed below the
+    * projection and evaluates it again.
     *
     * @param tsUtc timestamp column already in UTC (the session zone;
     *   shift local fixed-offset stamps by the zone offset first, as
     *   the reference does)
-    * @param elOut output column: true (geometric) elevation, degrees —
-    *   compose [[apparentElevationDeg]] for the refraction-corrected
-    *   angle pvlib reports as `apparent_elevation`
-    * @param azOut output column: azimuth degrees clockwise from north
-    *   in [0°, 360°)
+    * @return `el`: true (geometric) elevation, degrees — compose
+    *   [[apparentElevationDeg]] for the refraction-corrected angle
+    *   pvlib reports as `apparent_elevation`; `az`: azimuth degrees
+    *   clockwise from north in [0°, 360°)
     */
-  def withEphemerisPosition(
-      df: org.apache.spark.sql.DataFrame,
-      tsUtc: Column,
-      latDeg: Double,
-      lonDeg: Double,
-      elOut: String,
-      azOut: String
-  ): org.apache.spark.sql.DataFrame = {
-    val abber = 20.0 / 3600.0
-    val sinLat = math.sin(latDeg * DegToRad)
-    val cosLat = math.cos(latDeg * DegToRad)
-    val yr = year(tsUtc) - lit(1900)
-    val yrBegin = lit(365.0) * yr + floor((yr - lit(1)).cast("double") / lit(4.0)) - lit(0.5)
-    val c = col _
-    df
-      .withColumn("__eph_ez", yrBegin + dayofyear(tsUtc))
-      .withColumn("__eph_uh", hour(tsUtc) + minute(tsUtc) / lit(60.0) + second(tsUtc) / lit(3600.0))
-      .withColumn("__eph_gmst0", {
-        val t = c("__eph_ez") / lit(36525.0)
-        val frac = lit(6.0 / 24.0) + lit(38.0 / 1440.0) +
-          (lit(45.836) + lit(8640184.542) * t + lit(0.0929) * t * t) / lit(86400.0)
-        lit(360.0) * (frac - floor(frac))
-      })
-      .withColumn("__eph_locast",
-        pmod(lit(360.0 + lonDeg) +
-          pmod(c("__eph_gmst0") + lit(360.0) * (lit(1.0027379093) * c("__eph_uh") / lit(24.0)),
-            lit(360.0)),
-          lit(360.0)))
-      .withColumn("__eph_epoch", c("__eph_ez") + c("__eph_uh") / lit(24.0))
-      .withColumn("__eph_t1", c("__eph_epoch") / lit(36525.0))
-      .withColumn("__eph_obliq",
-        (lit(23.452294) - lit(0.0130125) * c("__eph_t1") -
-          lit(1.64e-06) * c("__eph_t1") * c("__eph_t1") +
-          lit(5.03e-07) * c("__eph_t1") * c("__eph_t1") * c("__eph_t1")) * lit(DegToRad))
-      .withColumn("__eph_mlper",
-        lit(281.22083) + lit(4.70684e-05) * c("__eph_epoch") +
-          lit(0.000453) * c("__eph_t1") * c("__eph_t1") +
-          lit(3e-06) * c("__eph_t1") * c("__eph_t1") * c("__eph_t1"))
-      .withColumn("__eph_manom",
-        pmod(lit(358.47583) + lit(0.985600267) * c("__eph_epoch") -
-          lit(0.00015) * c("__eph_t1") * c("__eph_t1") -
-          lit(3e-06) * c("__eph_t1") * c("__eph_t1") * c("__eph_t1"), lit(360.0)))
-      .withColumn("__eph_ecc",
-        lit(0.01675104) - lit(4.18e-05) * c("__eph_t1") -
-          lit(1.26e-07) * c("__eph_t1") * c("__eph_t1"))
-      // Kepler fixed point, one projection per iteration (each __eph_ea
-      // is referenced once by the next, so inlining here is harmless —
-      // the tree stays linear): E ← M + deg(e)·sin(rad(E)). Five steps
-      // over-converge pvlib's own 1e-5° exit at e ≈ 0.0167.
-      .withColumn("__eph_ea", c("__eph_manom"))
-      .transform { d0 =>
-        (1 to 5).foldLeft(d0) { (d, _) =>
-          d.withColumn("__eph_ea",
-            c("__eph_manom") + lit(RadToDeg) * c("__eph_ecc") * sin(c("__eph_ea") * lit(DegToRad)))
-        }
-      }
-      .withColumn("__eph_eclon",
-        (pmod(c("__eph_mlper") +
-          lit(2.0 * RadToDeg) * atan2(
-            sqrt((lit(1.0) + c("__eph_ecc")) / (lit(1.0) - c("__eph_ecc"))) *
-              tan(c("__eph_ea") * lit(DegToRad) / lit(2.0)),
-            lit(1.0)),
-          lit(360.0)) - lit(abber)) * lit(DegToRad))
-      .withColumn("__eph_dec", asin(sin(c("__eph_obliq")) * sin(c("__eph_eclon"))))
-      .withColumn("__eph_ha0",
-        c("__eph_locast") - lit(RadToDeg) *
-          atan2(cos(c("__eph_obliq")) * sin(c("__eph_eclon")), cos(c("__eph_eclon"))))
-      .withColumn("__eph_ha",
-        (c("__eph_ha0") - when(abs(c("__eph_ha0")) > lit(180.0),
-          lit(360.0) * signum(c("__eph_ha0"))).otherwise(lit(0.0))) * lit(DegToRad))
-      .withColumn("__eph_az0", lit(RadToDeg) *
-        atan2(-sin(c("__eph_ha")),
-          lit(cosLat) * tan(c("__eph_dec")) - lit(sinLat) * cos(c("__eph_ha"))))
-      .withColumn(elOut, lit(RadToDeg) *
-        asin(lit(cosLat) * cos(c("__eph_dec")) * cos(c("__eph_ha")) +
-          lit(sinLat) * sin(c("__eph_dec"))))
-      .withColumn(azOut,
-        when(c("__eph_az0") < lit(0.0), c("__eph_az0") + lit(360.0)).otherwise(c("__eph_az0")))
-      .drop("__eph_ez", "__eph_uh", "__eph_gmst0", "__eph_locast", "__eph_epoch",
-        "__eph_t1", "__eph_obliq", "__eph_mlper", "__eph_manom", "__eph_ecc",
-        "__eph_ea", "__eph_eclon", "__eph_dec", "__eph_ha0", "__eph_ha", "__eph_az0")
+  def ephemerisPosition(tsUtc: Column, latDeg: Double, lonDeg: Double): Column = {
+    GraftFunctions.ensure()
+    call_function("graft_solar_position", tsUtc, lit(latDeg), lit(lonDeg))
   }
 
   /** Atmospheric-refraction correction (degrees) for a true

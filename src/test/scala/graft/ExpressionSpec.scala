@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.GraftFunctions
+import graft.functions.{GraftFunctions, Solar}
 
 /** Native Catalyst expression: semantics + registration + codegen. */
 class ExpressionSpec extends AnyFunSuite {
@@ -292,5 +292,93 @@ class ExpressionSpec extends AnyFunSuite {
     val nulls = Seq(Option.empty[String]).toDF("t")
       .select(call_function("graft_winnow_mins", col("t"), lit(5), lit(4))).collect()(0)
     assert(nulls.isNullAt(0), "null text must stay null")
+  }
+
+  test("every native function resolves by name after register and in a GraftExtensions session") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    val expected = GraftFunctions.Natives.map { case (name, cls, _) => name -> (cls: Class[_]) }
+    // each builder reads at most four arguments; nulls cast to any type
+    def resolved(s: SparkSession): Seq[(String, Class[_])] = expected.map { case (name, _) =>
+      name -> s.sessionState.functionRegistry.lookupFunctionBuilder(FunctionIdentifier(name))
+        .map(b => b(Seq.fill(4)(Literal(null))).getClass: Class[_]).orNull
+    }
+    val plain = spark.newSession()
+    assert(resolved(plain).forall(_._2 == null), "a new session starts without the natives")
+    GraftFunctions.register(plain)
+    assert(resolved(plain) == expected)
+
+    val active = SparkSession.getActiveSession
+    val default = SparkSession.getDefaultSession
+    val ext = try {
+      // create() starts a new session on the running SparkContext
+      SparkSession.builder().withExtensions(new graft.functions.GraftExtensions).create()
+    } finally {
+      active.foreach(SparkSession.setActiveSession)
+      default.foreach(SparkSession.setDefaultSession)
+    }
+    assert(resolved(ext) == expected)
+    val q = "SELECT graft_solar_position(TIMESTAMP'2024-03-11 20:00:00', 37.5, -122.0).el AS el"
+    assert(ext.sql(q).head().getDouble(0) == plain.sql(q).head().getDouble(0))
+  }
+
+  test("graft_solar_position equals the frozen ephemeris column chain bit for bit, interpreted and codegen") {
+    import java.lang.Double.doubleToRawLongBits
+    GraftFunctions.register(spark)
+    // year boundaries (1999/2000, 2023/2024, 2024/2025), a leap day and
+    // its neighbours, both solstices, a non-leap century year, and days
+    // before 1900, where the day count is negative (`floor` of a
+    // negative quotient, `pmod` of a negative mean anomaly). Each
+    // day is sampled every 7 min 13 s (non-zero seconds) for 24 h, so the
+    // local sidereal time sweeps [0°, 360°): the hour angle runs
+    // negative and positive and takes both sides of the |ha0| > 180°
+    // wrap, and the elevation crosses the horizon band around −0.83°.
+    val days = Seq("1850-06-21", "1899-12-31", "1999-12-31", "2000-01-01", "2023-12-31",
+      "2024-01-01", "2024-02-28", "2024-02-29", "2024-03-01", "2024-06-21", "2024-12-21",
+      "2024-12-31", "2100-03-01")
+    val dayMicros = days.map(d =>
+      java.time.LocalDate.parse(d).atStartOfDay(java.time.ZoneOffset.UTC).toEpochSecond * 1000000L)
+    val perDay = 200
+    // a range, not a local relation, so no optimizer rule evaluates the
+    // projections ahead of the mode under test
+    val stamps = spark.range(days.length * perDay).select(timestamp_micros(
+      element_at(typedLit(dayMicros), (col("id") / perDay).cast("int") + 1) +
+        (col("id") % perDay) * lit(433L * 1000000L)).as("ts"))
+    val sites = Seq((37.5, -122.0), (-33.9, 151.2), (64.8, -147.7), (-54.8, -68.3), (0.0, 0.0))
+    val modes = Seq(
+      "interpreted" -> Seq("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"),
+      "codegen" -> Seq("spark.sql.codegen.wholeStage" -> "true",
+        "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY"))
+    val zones = Seq("UTC", "Australia/Adelaide")
+    for ((mode, confs) <- modes; zone <- zones) {
+      val all = (confs :+ ("spark.sql.session.timeZone" -> zone)).toMap
+      val saved = all.keys.map(k => k -> spark.conf.getOption(k)).toMap
+      all.foreach { case (k, v) => spark.conf.set(k, v) }
+      try {
+        val rows = sites.flatMap { case (lat, lon) =>
+          EphemerisChain.withEphemerisPosition(
+              stamps.withColumn("p", Solar.ephemerisPosition(col("ts"), lat, lon)),
+              col("ts"), lat, lon, "el", "az")
+            .select(col("p.el"), col("p.az"), col("el"), col("az"))
+            .collect().map(r => (r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3)))
+        }
+        assert(rows.length == sites.length * days.length * perDay)
+        val off = rows.filter { case (ne, na, ce, ca) =>
+          doubleToRawLongBits(ne) != doubleToRawLongBits(ce) ||
+            doubleToRawLongBits(na) != doubleToRawLongBits(ca)
+        }
+        assert(off.length == 0, s"$mode/$zone: rows differ, first ${off.headOption}")
+        assert(rows.exists(_._2 < 180.0) && rows.exists(_._2 > 180.0), "both azimuth halves")
+        assert(rows.count(r => math.abs(r._1 + 0.83) < 0.5) > 10, "horizon band")
+      } finally saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+    val nulls = spark.range(1)
+      .select(Solar.ephemerisPosition(lit(null).cast("timestamp"), 37.5, -122.0).as("p"))
+      .head()
+    assert(nulls.isNullAt(0), "a null stamp gives a null struct")
   }
 }

@@ -296,7 +296,8 @@ class PlotTablesSpec extends AnyFunSuite {
     import graft.functions.Solar
     // expected values computed with a separate straight-Python
     // transcription of the Sandia/pvlib ephemeris (SAND85-0273);
-    // pins the COLUMN translation, incl. Kepler unroll, mod signs,
+    // pins the native expression and the frozen column chain it
+    // replaced (`EphemerisChain`), incl. Kepler unroll, mod signs,
     // hour-angle wrap, and both hemispheres / both azimuth halves
     val cases = Seq(
       // (utc timestamp, lat, lon, expected el, expected az)
@@ -310,11 +311,16 @@ class PlotTablesSpec extends AnyFunSuite {
     )
     import spark.implicits._
     for ((ts, lat, lon, expEl, expAz) <- cases) {
-      val r = Solar.withEphemerisPosition(
+      val native = Seq(ts).toDF("s")
+        .select(Solar.ephemerisPosition(to_timestamp(col("s")), lat, lon).as("p"))
+        .select(col("p.el"), col("p.az"))
+      val chain = EphemerisChain.withEphemerisPosition(
           Seq(ts).toDF("s"), to_timestamp(col("s")), lat, lon, "el", "az")
-        .select(col("el"), col("az")).collect()(0)
-      assert(math.abs(r.getDouble(0) - expEl) < 1e-8, s"$ts el ${r.getDouble(0)} vs $expEl")
-      assert(math.abs(r.getDouble(1) - expAz) < 1e-8, s"$ts az ${r.getDouble(1)} vs $expAz")
+        .select(col("el"), col("az"))
+      for (r <- Seq(native, chain).map(_.collect()(0))) {
+        assert(math.abs(r.getDouble(0) - expEl) < 1e-8, s"$ts el ${r.getDouble(0)} vs $expEl")
+        assert(math.abs(r.getDouble(1) - expAz) < 1e-8, s"$ts az ${r.getDouble(1)} vs $expAz")
+      }
     }
   }
 
