@@ -58,7 +58,7 @@ object GraftSession {
       // overhead (measured: +42 s across the bench suite for −2 s on
       // one query). The solver stages that need parallelism despite
       // tiny bytes pin it explicitly through `analyses.SiteLane`, whose
-      // fixed-partitioner RDD stage AQE never re-coalesces.
+      // `repartitionById` shuffle AQE never coalesces.
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)

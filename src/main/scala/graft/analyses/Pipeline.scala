@@ -2,12 +2,9 @@ package graft.analyses
 
 import java.time.ZoneId
 
-import scala.reflect.ClassTag
-
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 
 import graft.operators.{DayStats, SideJoin, TimeAxis}
 import graft.solvers.{Cluster, Kernels}
@@ -66,38 +63,24 @@ case class SiteReport(
 /** The fleet pipeline (reference `DataHandler.run_pipeline`,
   * `data_handler.py:326-716`) re-expressed Spark-first, as ONE
   * shuffle: the raw `(site, ts, value)` rows cross one [[SiteLane]]
-  * (a fixed site partitioner, sorted by site, `ts`, value), and each
+  * (placed by site id, sorted by site, `ts`, value), and each
   * task builds a site's day rows ([[siteDays]]: capacity p95, day
   * aggregates, smoothness) and runs its solver stages
   * ([[analyzeSite]]) in the same pass — the Dask per-site task graph
-  * (`runner.py:177-194`) becomes Spark partition-parallelism, one job
-  * and two stages for the whole fleet.
+  * (`runner.py:177-194`) becomes Spark partition-parallelism, one
+  * exchange and two stages for the whole fleet.
   *
   * Memory: a task holds one site's raw rows in a `ts` and a value
   * array grown by doubling, plus the p95's sorted copy — up to about
   * 40 B per row at peak, since the last doubling briefly holds the old
   * and new arrays together: a site at 1-minute cadence for 20 years
-  * (10.5 M rows) peaks at about 400 MB. The lane's shuffle-read sort
-  * also buffers the partition's rows as objects; that buffer spills to
-  * disk under Spark's execution-memory limit. Parallelism is across
-  * sites only: a fleet with fewer sites than cores leaves cores idle.
+  * (10.5 M rows) peaks at about 400 MB. The lane's sort also buffers
+  * the partition's rows, as `UnsafeRow`s in Spark's sorter, which
+  * spills to disk under Spark's execution-memory limit; a row becomes
+  * a `RawObs` only as its site is read. Parallelism is across sites
+  * only: a fleet with fewer sites than cores leaves cores idle.
   */
 object Pipeline {
-
-  /** The fleet lane's sort: site, then `ts`, then value — the value
-    * pins the order of rows that share a timestamp (total order:
-    * -0.0 before 0.0, NaN last).
-    */
-  private implicit val rawObsOrdering: Ordering[RawObs] = new Ordering[RawObs] {
-    override def compare(a: RawObs, b: RawObs): Int = {
-      val c = java.lang.Long.compare(a.site, b.site)
-      if (c != 0) c
-      else {
-        val t = java.lang.Long.compare(a.ts, b.ts)
-        if (t != 0) t else java.lang.Double.compare(a.value, b.value)
-      }
-    }
-  }
 
   /** Build the DayStats fact table for a long (site, ts, value)
     * input. Single aggregation pass + one [[SideJoin]] (broadcast by
@@ -135,21 +118,25 @@ object Pipeline {
       tsCol: String,
       valueCol: String
   ): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    spark.createDataset(dayLane(df, site, tsCol, valueCol)((_, days) => days.iterator))
+    import df.sparkSession.implicits._
+    dayLane(df, site, tsCol, valueCol)((_, days) => days.iterator)
       .toDF("site", "day_idx", "energy", "density", "daily_max", "com_hour", "n_obs",
         "capacity", "smoothness")
   }
 
   /** The fleet lane: key the non-null raw rows by site through
-    * [[SiteLane]] and hand each site's [[siteDays]] to `solve`.
+    * [[SiteLane]] and hand each site's [[siteDays]] to `solve`. Rows
+    * sort by `ts`, then by the value's IEEE total-order bits
+    * (`graft_double_order_bits`): Spark's double sort ties -0.0 with
+    * 0.0, and the bits pin the order of rows that share a timestamp as
+    * `Double.compare` does (-0.0 before 0.0, NaN last).
     */
-  private def dayLane[O: ClassTag](df: DataFrame, site: String, tsCol: String, valueCol: String)(
+  private def dayLane[O: Encoder](df: DataFrame, site: String, tsCol: String, valueCol: String)(
       solve: (Long, Array[DayRow]) => Iterator[O]
-  ): RDD[O] = {
+  ): Dataset[O] = {
     val spark = df.sparkSession
     import spark.implicits._
+    graft.functions.GraftFunctions.ensure(spark)
     val zone = DateTimeUtils.getZoneId(spark.sessionState.conf.sessionLocalTimeZone)
     // a TIMESTAMP_NTZ column is cast to TIMESTAMP (exact under the
     // engine's UTC session, as in sources.Tables); the site is left to
@@ -159,7 +146,9 @@ object Pipeline {
         unix_micros(col(tsCol).cast("timestamp")).as("ts"),
         col(valueCol).cast("double").as("value"))
       .as[RawObs]
-    SiteLane(raw, (r: RawObs) => r.site)((id, rows) => solve(id, siteDays(id, rows, zone)))
+    SiteLane(raw, (r: RawObs) => r.site, col("ts"), call_function("graft_double_order_bits", col("value"))) {
+      (id, rows) => solve(id, siteDays(id, rows, zone))
+    }
   }
 
   /** Spark's `>` on doubles: NaN is the greatest value and equal to
@@ -281,10 +270,9 @@ object Pipeline {
       faultInjector: (Long, String) => Unit = (_, _) => ()
   ): Dataset[SiteReport] = {
     import spark.implicits._
-    val solved = dayLane(df, site, tsCol, valueCol) { (siteId, days) =>
+    dayLane(df, site, tsCol, valueCol) { (siteId, days) =>
       Iterator.single(analyzeSite(siteId, days, period, faultInjector(siteId, _)))
     }
-    spark.createDataset(solved)
   }
 
   /** Per-site analysis on bounded state; each stage is best-effort. */

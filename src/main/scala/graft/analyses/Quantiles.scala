@@ -5,15 +5,9 @@ import org.apache.spark.sql.{DataFrame, Encoder, SparkSession}
 
 import graft.solvers.Kernels
 
-/** One dilated-grain observation — the solver lane's shuffle row.
-  * Flat primitive fields by design (the p01 DayRow treatment,
-  * optimization round 14): the previous lane shuffled
-  * ((site, day, slot), (site, day, slot, value)) generic tuples — the
-  * key DUPLICATED every field of the value, and each row carried a
-  * Tuple3 + Tuple4 with 5 boxed primitives. The row itself is now the
-  * sort key (explicit field-wise Ordering, no per-compare
-  * allocation), so the shuffle moves each field once with one flat
-  * object per row.
+/** One dilated-grain observation as the solver lane decodes it: flat
+  * primitive fields, one object per row. The lane shuffles and sorts
+  * the row's columns; the object exists only while its site is read.
   */
 private[analyses] case class DilRow(
     site: Long,
@@ -36,19 +30,6 @@ private[analyses] case class DilRow(
   * periods.
   */
 object Quantiles {
-
-  private implicit val dilRowOrdering: Ordering[DilRow] = new Ordering[DilRow] {
-    override def compare(a: DilRow, b: DilRow): Int = {
-      val c1 = java.lang.Long.compare(a.site, b.site)
-      if (c1 != 0) return c1
-      // ISO yyyy-MM-dd day strings order lexicographically ==
-      // chronologically (fixed width), same total order the previous
-      // (Long, String, Int) tuple key induced
-      val c2 = a.day.compareTo(b.day)
-      if (c2 != 0) return c2
-      java.lang.Integer.compare(a.dilSlot, b.dilSlot)
-    }
-  }
 
   /** One site's solver input, accumulated streaming from the sorted
     * shuffle into primitive arrays (no per-row tuple/boxing, no
@@ -98,10 +79,10 @@ object Quantiles {
     new SiteBlock(siteId, days.toArray, dayIdx.result(), slots.result(), t.result(), y.result())
   }
 
-  /** The dilated-grain [[SiteLane]]: (day, slot) secondary sort, one
-    * [[SiteBlock]] per site.
+  /** The dilated-grain [[SiteLane]]: (day, slot) secondary sort (ISO
+    * `yyyy-MM-dd` days order as strings), one [[SiteBlock]] per site.
     */
-  private def solverLane[T: Encoder: scala.reflect.ClassTag](
+  private def solverLane[T: Encoder](
       spark: SparkSession,
       dilated: DataFrame,
       nBins: Int
@@ -113,10 +94,9 @@ object Quantiles {
         col("dil_slot").cast("int").as("dilSlot"), col("dil_value").cast("double").as("dilValue")
       )
       .as[DilRow]
-    val solved = SiteLane(rows, (r: DilRow) => r.site) { (siteId, it) =>
+    SiteLane(rows, (r: DilRow) => r.site, col("day"), col("dilSlot")) { (siteId, it) =>
       solve(siteBlock(siteId, it, nBins))
-    }
-    spark.createDataset(solved).toDF()
+    }.toDF()
   }
 
   /** @param crossBasis false (default) fits the additive 2-period

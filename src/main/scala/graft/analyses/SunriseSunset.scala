@@ -40,9 +40,6 @@ object SunriseSunset {
   /** (site, day, sr_arr, ss_arr): one site-day of [[roughGrid]]. */
   private type GridRow = (Long, String, Seq[Double], Seq[Double])
 
-  /** The solver lane's sort: site, then day (ISO dates order as strings). */
-  private implicit val gridRowOrdering: Ordering[GridRow] = Ordering.by(r => (r._1, r._2))
-
   /** `np.logspace(-5, -1, searchPts)` (`sunrise_sunset_estimation.py:199`). */
   def thresholdGrid(searchPts: Int = 21): Array[Double] =
     Array.tabulate(searchPts)(i => math.pow(10.0, -5.0 + 4.0 * i / (searchPts - 1).toDouble))
@@ -223,13 +220,14 @@ object SunriseSunset {
     val nan = lit(Double.NaN)
     val grid = roughGrid(df, site, tsCol, valueCol, searchPts)
       .select(
-        col(site).cast("long"), col("day").cast("string"),
+        col(site).cast("long").as("site"), col("day").cast("string"),
         transform(col("sr_arr"), x => coalesce(x, nan)).as("sr_arr"),
         transform(col("ss_arr"), x => coalesce(x, nan)).as("ss_arr")
       )
       .as[GridRow]
-    // the CPU-dense per-site optimizer, one site at a time, days in order
-    val solved = SiteLane(grid, (r: GridRow) => r._1) { (siteId, it) =>
+    // the CPU-dense per-site optimizer, one site at a time, days in
+    // order (ISO dates order as strings)
+    SiteLane(grid, (r: GridRow) => r._1, col("day")) { (siteId, it) =>
       val days = it.toArray
       val n = days.length
       // CALENDAR offsets keep the periodic phase honest across gaps
@@ -243,7 +241,6 @@ object SunriseSunset {
           fit.srRough(d), fit.ssRough(d), fit.srEst(d), fit.ssEst(d))
       }
     }
-    spark.createDataset(solved)
       .toDF(site, "day", "th_idx", "threshold", "ho_err", "plausible",
         "sunrise_rough", "sunset_rough", "sunrise_est", "sunset_est")
       .withColumn("day", col("day").cast("date"))

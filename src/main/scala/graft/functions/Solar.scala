@@ -72,10 +72,6 @@ object Solar {
     lit(9.87) * sin(lit(2.0) * b) - lit(7.53) * cos(b) - lit(1.5) * sin(b)
   }
 
-  /** Hour angle (degrees) from fractional solar hour of day. */
-  def hourAngleDeg(solarHour: Column): Column =
-    lit(15.0) * (solarHour - lit(12.0))
-
   /** Daylight hours at `latDeg` for declination `declDeg`
     * (sunset-hour-angle formula).
     */

@@ -231,18 +231,6 @@ object DayStats {
       .agg(sum(abs(col("__d2"))).as("smoothness"))
   }
 
-  /** Energy center of mass — solar-noon estimate (reference
-    * `solar_noon.py:19-39`): Σ(hourᵢ·pᵢ)/Σpᵢ per day.
-    */
-  def solarNoonCoM(df: DataFrame, site: String, tsCol: String, valueCol: String): DataFrame = {
-    val h = TimeAxis.hourOfDay(col(tsCol))
-    // try_divide: a dead day (all-zero power) yields NULL, never a
-    // DIVIDE_BY_ZERO that would kill the fleet job under ANSI mode —
-    // mirroring the reference's per-column NaN tolerance.
-    df.groupBy(col(site), to_date(col(tsCol)).as("day"))
-      .agg(try_divide(sum(h * col(valueCol)), sum(col(valueCol))).as("com_hour"))
-  }
-
   /** Rough sunrise/sunset: first/last hour with value above a fraction
     * of the site max (reference `sunrise_sunset.py:11-27`). Threshold
     * rounded to 6 dp for cross-engine determinism at compare time.

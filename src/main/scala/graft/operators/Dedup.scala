@@ -369,7 +369,6 @@ object Dedup {
       labels = jumped
       it += 1
     }
-    if (sys.env.contains("GRAFT_CC_DEBUG")) println(s"[cc] converged after $it rounds")
     adj.unpersist(false)
     labels.toDF("id", "component")
   }

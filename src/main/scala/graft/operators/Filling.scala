@@ -19,12 +19,6 @@ object Filling {
   /** Non-negative clamp (reference `data_filling.py:15`). */
   def nonNeg(v: Column): Column = greatest(v, lit(0.0))
 
-  /** Zero out missing values outside the sun-up mask (reference
-    * `data_filling.py:13-21`).
-    */
-  def zeroNight(v: Column, daytime: Column): Column =
-    when(!daytime && v.isNull, lit(0.0)).otherwise(v)
-
   /** Linear interpolation of nulls within each key group, ordered by a
     * numeric axis (epoch seconds): the standard Spark window idiom —
     * last non-null before, first non-null after, weight by axis

@@ -1,10 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.analyses.{Profiler, Quantiles, SiteLane}
+import graft.analyses.{Pipeline, Profiler, Quantiles, SiteLane, SunriseSunset}
 import graft.operators.DayStats
 import graft.solvers.Kernels
 
@@ -64,11 +65,14 @@ class SolverLaneSpec extends AnyFunSuite {
     }
   }
 
+  /** `(site, k)` rows as the lane takes them: a `site` column. */
+  private def laneInput(rows: Seq[(Long, Int)]) = rows.toDF("site", "k").as[(Long, Int)]
+
   test("SiteLane: negative ids, more sites than partitions, each site solved once in order") {
     // 4 partitions, 15 sites including negative and beyond-Int ids
     val sites = (-7L to 6L) :+ -5000000000L
     val rows = scala.util.Random.shuffle(for (s <- sites; k <- 0 until 5) yield (s, k))
-    val solved = SiteLane(rows.toDS(), (r: (Long, Int)) => r._1) { (site, it) =>
+    val solved = SiteLane(laneInput(rows), (r: (Long, Int)) => r._1, col("k")) { (site, it) =>
       Iterator.single(site -> it.toVector)
     }.collect()
     assert(solved.map(_._1).sorted.toSeq == sites.sorted, "each site exactly once")
@@ -79,27 +83,65 @@ class SolverLaneSpec extends AnyFunSuite {
 
   test("SiteLane: rows a solve leaves unread never reach the next site") {
     val rows = scala.util.Random.shuffle(for (s <- 1L to 9L; k <- 0 until 4) yield (s, k))
-    val firsts = SiteLane(rows.toDS(), (r: (Long, Int)) => r._1) { (site, it) =>
+    val firsts = SiteLane(laneInput(rows), (r: (Long, Int)) => r._1, col("k")) { (site, it) =>
       Iterator.single(site -> it.next()._2)
     }.collect()
     assert(firsts.sortBy(_._1).toSeq == (1L to 9L).map(_ -> 0))
     // a lazy solve pulls its rows only as its output is consumed
-    val pulled = SiteLane(rows.toDS(), (r: (Long, Int)) => r._1) { (site, it) =>
+    val pulled = SiteLane(laneInput(rows), (r: (Long, Int)) => r._1, col("k")) { (site, it) =>
       it.map(r => site -> r)
     }.collect()
     assert(pulled.length == rows.length && pulled.forall { case (site, r) => r._1 == site })
   }
 
-  test("SiteLane: byte-tiny input still gets defaultParallelism partitions, placed by site hash") {
-    // AQE would coalesce a Dataset shuffle of a few bytes to ONE
-    // partition; the lane's fixed partitioner must not be re-planned
-    val par = spark.sparkContext.defaultParallelism
-    val lane = SiteLane(Seq((1L, 0), (2L, 0), (-3L, 0)).toDS(), (r: (Long, Int)) => r._1) {
-      (site, _) => Iterator.single(site)
+  /** Each site's lane task: `(site, partition id)`. */
+  private def placement(rows: Dataset[(Long, Int)]) =
+    SiteLane(rows, (r: (Long, Int)) => r._1) { (site, _) =>
+      Iterator.single(site -> TaskContext.getPartitionId())
     }
-    assert(lane.getNumPartitions == par)
-    val placed = lane.mapPartitionsWithIndex((i, it) => it.map(_ -> i)).collect()
-    placed.foreach { case (site, i) => assert(i == ((site.hashCode % par) + par) % par, s"site $site") }
+
+  test("SiteLane: byte-tiny input still gets defaultParallelism partitions, placed by site id") {
+    // AQE would coalesce a hash-repartition shuffle of a few bytes to
+    // ONE partition; the lane's partition-id shuffle must not be
+    val par = spark.sparkContext.defaultParallelism
+    val lane = placement(laneInput(Seq((1L, 0), (2L, 0), (-3L, 0))))
+    assert(lane.rdd.getNumPartitions == par)
+    lane.collect().foreach { case (site, i) =>
+      assert(i == Math.floorMod(site, par.toLong), s"site $site")
+    }
+  }
+
+  test("SiteLane: an input already hash-partitioned by site still runs par lane tasks") {
+    // the optimizer drops a repartition(par, site) over an input that
+    // is already hashpartitioning(site); the lane's shuffle must stay
+    val par = spark.sparkContext.defaultParallelism
+    val input = laneInput(for (s <- 0L until 2L * par; k <- 0 until 3) yield (s, k))
+      .repartition(par, col("site"))
+    val placed = placement(input).collect()
+    assert(placed.length == 2 * par, "each site once")
+    placed.foreach { case (site, i) =>
+      assert(i == Math.floorMod(site, par.toLong), s"site $site in task $i")
+    }
+    assert(placed.map(_._2).distinct.length == par, "every lane task solved sites")
+  }
+
+  test("building a lane frame over an upstream exchange starts no job") {
+    // the lane is a plan, not an RDD: nothing runs until an action
+    val fleet = graft.sources.Synth.pvFleet(spark, nSites = 2, nDays = 30, slotsPerDay = 24)
+    val perMinute = fleet
+      .groupBy(col("site"), date_trunc("minute", col("ts")).as("ts"))
+      .agg(avg(col("power")).as("power"))
+    val dilated = fleet
+      .groupBy(col("site"), to_date(col("ts")).as("day"), hour(col("ts")).as("dil_slot"))
+      .agg(avg(col("power")).as("dil_value"))
+    val frames = Seq[(String, () => DataFrame)](
+      "Pipeline.run" -> (() => Pipeline.run(spark, perMinute, "site", "ts", "power").toDF()),
+      "Quantiles.estimateAndDetect" -> (() => Quantiles.estimateAndDetect(spark, dilated, nBins = 24)),
+      "SunriseSunset.estimates" -> (() => SunriseSunset.estimates(spark, fleet, "site", "ts", "power")))
+    frames.foreach { case (name, build) =>
+      val c = JobCounter.during(spark, name)(build().queryExecution.optimizedPlan)
+      assert(c.jobs == 0, s"building $name started ${c.jobs} jobs")
+    }
   }
 
   test("fused orientationCells: cells = max(v)/p99 and rise/set re-aggregate exactly") {
