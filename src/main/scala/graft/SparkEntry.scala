@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
-import graft.analyses.Pipeline
+import graft.analyses.{Pipeline, SiteLane}
 import graft.functions.Solar
 import graft.operators._
 import graft.sources.Tables
@@ -1347,43 +1347,38 @@ object SparkEntry {
     import s.implicits._
     val clean = Tables.events(s, dir)
       .filter(col("ts").isNotNull && col("value").isNotNull)
-    val daily = clean
-      .groupBy(col("user_id").as("site"), to_date(col("ts")).as("day"))
-      .agg((sum(col("value")) * 24.0 / count(lit(1))).as("energy"))
-    daily
-      .select(col("site"), col("day").cast("string").as("day"), col("energy"))
+    val daily = DayStats.dailyEnergy(clean, "user_id", "ts", "value")
+      .select(col("user_id").as("site"), col("day").cast("string").as("day"), col("energy"))
       .as[(Long, String, Double)]
-      .groupByKey(_._1)
-      .mapGroups { (siteId, it) =>
-        val rows = it.toArray.sortBy(_._2)
-        val n = rows.length
-        val energy = rows.map(_._3)
-        val use = energy.map(_ > 0.0)
-        val logE = energy.map(e => math.log(math.max(e, 1e-9)))
-        val d = graft.solvers.LossFactor.decompose(
-          logE, use, capacityLabels = null, harmonics = 2, rounds = 12)
-        val rep = graft.solvers.LossFactor.estimateLosses(energy, use, d)
-        def fin(v: Double) = !v.isNaN && !v.isInfinite
-        val soilNonpos = d.soiling.forall(_ <= 0.0)
-        val capZero = d.capacityChange.forall(_ == 0.0)
-        val degLinear = d.degradation(0) == 0.0 &&
-          (2 until n).forall(i => math.abs(
-            d.degradation(i) - 2 * d.degradation(i - 1) + d.degradation(i - 2)) < 1e-9)
-        val residMasked = (0 until n).forall(i => use(i) || d.residual(i) == 0.0)
-        val shapSum = rep.degradationLoss + rep.soilingLoss + rep.capacityChangeLoss +
-          rep.weatherLoss + rep.outageLoss
-        val shapExact = math.abs(shapSum - rep.totalEnergyLoss) <=
-          1e-6 * math.max(1.0, math.abs(rep.totalEnergyLoss))
-        val allFinite =
-          Seq(d.seasonal, d.capacityChange, d.soiling, d.degradation, d.residual)
-            .forall(_.forall(fin)) &&
-            Seq(rep.totalEnergyLoss, rep.degradationLoss, rep.soilingLoss,
-              rep.capacityChangeLoss, rep.weatherLoss, rep.outageLoss).forall(fin)
-        (siteId, n.toLong, soilNonpos, capZero, degLinear, residMasked,
-          shapExact, allFinite)
-      }
-      .toDF("site", "n_days", "soil_nonpos", "cap_zero", "deg_linear",
-        "resid_masked", "shapley_exact", "all_finite")
+    SiteLane(daily, (r: (Long, String, Double)) => r._1, col("day")) { (siteId, it) =>
+      val rows = it.toArray
+      val n = rows.length
+      val energy = rows.map(_._3)
+      val use = energy.map(_ > 0.0)
+      val logE = energy.map(e => math.log(math.max(e, 1e-9)))
+      val d = graft.solvers.LossFactor.decompose(
+        logE, use, capacityLabels = null, harmonics = 2, rounds = 12)
+      val rep = graft.solvers.LossFactor.estimateLosses(energy, use, d)
+      def fin(v: Double) = !v.isNaN && !v.isInfinite
+      val soilNonpos = d.soiling.forall(_ <= 0.0)
+      val capZero = d.capacityChange.forall(_ == 0.0)
+      val degLinear = d.degradation(0) == 0.0 &&
+        (2 until n).forall(i => math.abs(
+          d.degradation(i) - 2 * d.degradation(i - 1) + d.degradation(i - 2)) < 1e-9)
+      val residMasked = (0 until n).forall(i => use(i) || d.residual(i) == 0.0)
+      val shapSum = rep.degradationLoss + rep.soilingLoss + rep.capacityChangeLoss +
+        rep.weatherLoss + rep.outageLoss
+      val shapExact = math.abs(shapSum - rep.totalEnergyLoss) <=
+        1e-6 * math.max(1.0, math.abs(rep.totalEnergyLoss))
+      val allFinite =
+        Seq(d.seasonal, d.capacityChange, d.soiling, d.degradation, d.residual)
+          .forall(_.forall(fin)) &&
+          Seq(rep.totalEnergyLoss, rep.degradationLoss, rep.soilingLoss,
+            rep.capacityChangeLoss, rep.weatherLoss, rep.outageLoss).forall(fin)
+      Iterator.single((siteId, n.toLong, soilNonpos, capZero, degLinear, residMasked,
+        shapExact, allFinite))
+    }.toDF("site", "n_days", "soil_nonpos", "cap_zero", "deg_linear",
+      "resid_masked", "shapley_exact", "all_finite")
   }
 
   /** Fixed-literal bit gate for [[graft.solvers.Kernels.pvproDecompose5]]
@@ -1924,7 +1919,7 @@ object SparkEntry {
     * (site, day) grain; windows are per-site — the same partitioning.
     */
   /** Clear-day detection HASH-GATED end to end — the p03 stage that
-    * was rows-only because it lives in a per-site `mapGroups`, now
+    * was rows-only because it lives in a per-site solver lane, now
     * cross-engine-verified: the dense (site, day, slot) grid with
     * max-on-collision fill, the ±10-calendar-day per-slot p90
     * envelope (linear-interpolated — `quantile_cont` semantics), and
@@ -3623,13 +3618,11 @@ object SparkEntry {
       .agg(sum(round(col("value") * 100).cast("long")).as("yv"))
       .select(col("site"), col("day"), col("yv").cast("double").as("y"))
       .as[(Long, String, Double)]
-    daily.groupByKey(_._1)
-      .flatMapGroups { (site: Long, it: Iterator[(Long, String, Double)]) =>
-        val rows = it.toArray.sortBy(_._2)
-        val iso = graft.solvers.Kernels.isotonicDecreasing(rows.map(_._3))
-        rows.indices.iterator.map(i => (site, rows(i)._2, rows(i)._3, iso(i)))
-      }
-      .toDF("site", "day", "y", "iso")
+    SiteLane(daily, (r: (Long, String, Double)) => r._1, col("day")) { (site, it) =>
+      val rows = it.toArray
+      val iso = graft.solvers.Kernels.isotonicDecreasing(rows.map(_._3))
+      rows.indices.iterator.map(i => (site, rows(i)._2, rows(i)._3, iso(i)))
+    }.toDF("site", "day", "y", "iso")
       .withColumn("iso", round(col("iso"), 4))
   }
 
@@ -3845,7 +3838,7 @@ object SparkEntry {
     !isnan(c) && abs(c) < lit(Double.MaxValue)
 
   /** Full fleet pipeline (SURVEY §3.1 run_pipeline analog): DayStats +
-    * per-site solver stages via mapGroups. HASH-GATED since round 8
+    * per-site solver stages in `SiteLane`. HASH-GATED since round 8
     * (the d29/e09 known-true-literal idiom): relational columns
     * (n_days, capacity — the q17 definitions) replayed by the oracle;
     * solver stages gated through construction-true invariants plus the
@@ -3973,27 +3966,25 @@ object SparkEntry {
         (sum(col("value")) * 24.0 / count(lit(1))).as("energy"),
         sum(round(col("value") * 1e6).cast("long")).as("v_micro"))
     val firstDay = daily.groupBy(col("site")).agg(min(col("day")).as("first_day"))
-    daily
+    val series = daily
       .join(broadcast(firstDay), Seq("site"))
       .select(col("site"), datediff(col("day"), col("first_day")).cast("double").as("t"),
         col("energy"), col("v_micro"))
       .as[(Long, Double, Double, Long)]
-      .groupByKey(_._1)
-      .mapGroups { (siteId, it) =>
-        val rows = it.toArray.sortBy(_._2)
-        val n = rows.length
-        val y = rows.map(r => math.log(math.max(r._3, 1e-9)))
-        val p = math.min(7, math.max(2, n))
-        val (x1, x2, x3, x4, x5) =
-          graft.solvers.Kernels.pvproDecompose5(y, p, model = "monotonic")
-        val drop = if (n > 0) x5.head - x5.last else 0.0
-        val amp = if (n > 0) x4.max - x4.min else 0.0
-        val ok = Seq(x1, x2, x3, x4, x5).forall(
-          _.forall(v => !v.isNaN && math.abs(v) < Double.MaxValue))
-        (siteId, n.toLong, rows.map(_._4).sum,
-          drop >= 0.0, amp >= 0.0, ok)
-      }
-      .toDF("site", "n_days", "value_micro", "drop_nonneg", "amp_nonneg", "decomp_finite")
+    SiteLane(series, (r: (Long, Double, Double, Long)) => r._1, col("t")) { (siteId, it) =>
+      val rows = it.toArray
+      val n = rows.length
+      val y = rows.map(r => math.log(math.max(r._3, 1e-9)))
+      val p = math.min(7, math.max(2, n))
+      val (x1, x2, x3, x4, x5) =
+        graft.solvers.Kernels.pvproDecompose5(y, p, model = "monotonic")
+      val drop = if (n > 0) x5.head - x5.last else 0.0
+      val amp = if (n > 0) x4.max - x4.min else 0.0
+      val ok = Seq(x1, x2, x3, x4, x5).forall(
+        _.forall(v => !v.isNaN && math.abs(v) < Double.MaxValue))
+      Iterator.single((siteId, n.toLong, rows.map(_._4).sum,
+        drop >= 0.0, amp >= 0.0, ok))
+    }.toDF("site", "n_days", "value_micro", "drop_nonneg", "amp_nonneg", "decomp_finite")
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(

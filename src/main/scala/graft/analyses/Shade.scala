@@ -101,18 +101,16 @@ object Shade {
   ): DataFrame = {
     import spark.implicits._
     val bs = basis.map(_.clone).toArray
-    profiles
-      .select(col("site").cast("long"), col("dil_slot").cast("int"), col("med_v").cast("double"))
+    val rows = profiles
+      .select(col("site").cast("long").as("site"), col("dil_slot").cast("int"), col("med_v").cast("double"))
       .as[(Long, Int, Double)]
-      .groupByKey(_._1)
-      .flatMapGroups { (site: Long, it: Iterator[(Long, Int, Double)]) =>
-        val arr = it.toArray
-        val n = arr.map(_._2).max + 1
-        val p = new Array[Double](n)
-        arr.foreach(r => p(r._2) = r._3)
-        projectRows(site, p, bs).iterator
-      }
-      .toDF("site", "dil_slot", "med_v", "recon_v", "shade_frac")
+    SiteLane(rows, (r: (Long, Int, Double)) => r._1) { (site, it) =>
+      val arr = it.toArray
+      val n = arr.map(_._2).max + 1
+      val p = new Array[Double](n)
+      arr.foreach(r => p(r._2) = r._3)
+      projectRows(site, p, bs).iterator
+    }.toDF("site", "dil_slot", "med_v", "recon_v", "shade_frac")
       .withColumn("shaded", col("shade_frac") > shadeThreshold)
   }
 

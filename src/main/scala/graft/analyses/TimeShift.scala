@@ -1,7 +1,7 @@
 package graft.analyses
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 
 import graft.operators.TimeAxis
 import graft.solvers.Kernels
@@ -28,39 +28,18 @@ object TimeShift {
     */
   def detect(spark: SparkSession, df: DataFrame, site: String, tsCol: String, valueCol: String, slotsPerDay: Int, sumCard: Boolean = false): DataFrame = {
     import spark.implicits._
-    val com = df
-      .groupBy(col(site).cast("long").as("site"), to_date(col(tsCol)).cast("string").as("day"))
-      .agg(
-        sum(TimeAxis.hourOfDay(col(tsCol)) * col(valueCol)).as("hv"),
-        sum(col(valueCol)).as("sv")
-      )
-      // try_divide: a dead day (zero total power) must not kill the
-      // fleet job under ANSI mode
-      .select(col("site"), col("day"), try_divide(col("hv"), col("sv")).as("com_hour"))
-      .filter(col("com_hour").isNotNull)
-      .as[(Long, String, Double)]
-    com
-      .groupByKey(_._1)
-      .flatMapGroups { (siteId: Long, it: Iterator[(Long, String, Double)]) =>
-        val days = it.toArray.sortBy(_._2)
-        val t = Array.tabulate(days.length)(_.toDouble)
-        val y = days.map(_._3)
-        if (days.length < 10) {
-          days.iterator.map(d => (siteId, d._2, 0.0, 0))
-        } else {
-          // weekly basis: periodic within any window, so it cannot
-          // absorb a one-time clock-shift step (a 365 d basis over a
-          // shorter span is non-periodic and would eat the step)
-          val (pwc, _) = Kernels.tvSeasonalFit(y, t, lambdaTv = 10.0, harmonics = 1, period = 7.0, sumCard = sumCard)
+    fitLane(spark, df, site, tsCol, valueCol, sumCard) { (siteId, days, fit) =>
+      fit match {
+        case None => days.iterator.map(d => (siteId, d._2, 0.0, 0))
+        case Some((pwc, _)) =>
           val base = Kernels.median(pwc)
           days.indices.iterator.map { i =>
             val shiftH = pwc(i) - base
             val rollSlots = math.round(shiftH * slotsPerDay / 24.0).toInt
             (siteId, days(i)._2, shiftH, rollSlots)
           }
-        }
       }
-      .toDF("site", "day", "shift_h", "roll_slots")
+    }.toDF("site", "day", "shift_h", "roll_slots")
   }
 
   /** [[detect]]'s solver internals exposed per day — the columns
@@ -75,31 +54,46 @@ object TimeShift {
     */
   def components(spark: SparkSession, df: DataFrame, site: String, tsCol: String, valueCol: String, sumCard: Boolean = false): DataFrame = {
     import spark.implicits._
+    fitLane(spark, df, site, tsCol, valueCol, sumCard) { (siteId, days, fit) =>
+      fit match {
+        case None => days.iterator.map(d => (siteId, d._2, d._3, 0.0, 0.0, false))
+        case Some((pwc, seasonal)) =>
+          days.indices.iterator.map(i => (siteId, days(i)._2, days(i)._3, pwc(i), seasonal(i), true))
+      }
+    }.toDF("site", "day", "metric", "s1", "s2", "used")
+  }
+
+  /** The lane [[detect]] and [[components]] share: the per-(site, day)
+    * power-weighted centre-of-mass hour, then per site, days in order
+    * (ISO dates order as strings), the pwc + weekly-seasonal fit —
+    * `None` below 10 days, where no fit runs.
+    */
+  private def fitLane[O: Encoder](spark: SparkSession, df: DataFrame, site: String, tsCol: String, valueCol: String, sumCard: Boolean)(
+      emit: (Long, Array[(Long, String, Double)], Option[(Array[Double], Array[Double])]) => Iterator[O]
+  ): Dataset[O] = {
+    import spark.implicits._
     val com = df
       .groupBy(col(site).cast("long").as("site"), to_date(col(tsCol)).cast("string").as("day"))
       .agg(
         sum(TimeAxis.hourOfDay(col(tsCol)) * col(valueCol)).as("hv"),
         sum(col(valueCol)).as("sv")
       )
+      // try_divide: a dead day (zero total power) must not kill the
+      // fleet job under ANSI mode
       .select(col("site"), col("day"), try_divide(col("hv"), col("sv")).as("com_hour"))
       .filter(col("com_hour").isNotNull)
       .as[(Long, String, Double)]
-    com
-      .groupByKey(_._1)
-      .flatMapGroups { (siteId: Long, it: Iterator[(Long, String, Double)]) =>
-        val days = it.toArray.sortBy(_._2)
-        val t = Array.tabulate(days.length)(_.toDouble)
-        val y = days.map(_._3)
-        if (days.length < 10) {
-          days.iterator.map(d => (siteId, d._2, d._3, 0.0, 0.0, false))
-        } else {
-          val (pwc, seasonal) = Kernels.tvSeasonalFit(y, t, lambdaTv = 10.0, harmonics = 1, period = 7.0, sumCard = sumCard)
-          days.indices.iterator.map { i =>
-            (siteId, days(i)._2, y(i), pwc(i), seasonal(i), true)
-          }
-        }
-      }
-      .toDF("site", "day", "metric", "s1", "s2", "used")
+    SiteLane(com, (r: (Long, String, Double)) => r._1, col("day")) { (siteId, it) =>
+      val days = it.toArray
+      val t = Array.tabulate(days.length)(_.toDouble)
+      val y = days.map(_._3)
+      // weekly basis: periodic within any window, so it cannot absorb
+      // a one-time clock-shift step (a 365 d basis over a shorter span
+      // is non-periodic and would eat the step)
+      val fit = if (days.length < 10) None
+        else Some(Kernels.tvSeasonalFit(y, t, lambdaTv = 10.0, harmonics = 1, period = 7.0, sumCard = sumCard))
+      emit(siteId, days, fit)
+    }
   }
 
   /** Apply the per-day roll to the raw grain: broadcast the shift

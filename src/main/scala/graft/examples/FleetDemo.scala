@@ -3,8 +3,8 @@ package graft.examples
 import org.apache.spark.sql.functions._
 
 import graft.GraftSession
-import graft.analyses.{Pipeline, Quantiles, Shade, TimeShift}
-import graft.operators.Dilation
+import graft.analyses.{Pipeline, Quantiles, Shade, SiteLane, TimeShift}
+import graft.operators.{DayStats, Dilation}
 import graft.sources.Synth
 
 /** End-to-end demo of the solar lifecycle on the synthetic fleet:
@@ -44,19 +44,16 @@ object FleetDemo {
 
     // PVPro-style post-processing of each site's daily energy
     import spark.implicits._
-    val daily = fleet.groupBy(col("site"), to_date(col("ts")).as("day"))
-      .agg((sum(col("power")) * 24.0 / count(lit(1))).as("energy"))
+    val daily = DayStats.dailyEnergy(fleet, "site", "ts", "power")
     val firstDay = daily.groupBy(col("site")).agg(min(col("day")).as("first_day"))
-    val trendRows = daily.join(broadcast(firstDay), Seq("site"))
+    val series = daily.join(broadcast(firstDay), Seq("site"))
       .select(col("site"), datediff(col("day"), col("first_day")).cast("double").as("t"), col("energy"))
       .as[(Long, Double, Double)]
-      .groupByKey(_._1)
-      .mapGroups { (siteId, it) =>
-        val rows = it.toArray.sortBy(_._2)
-        val (trend, _) = graft.solvers.Kernels.pvproDecompose(rows.map(_._3), rows.map(_._2))
-        (siteId, if (trend.nonEmpty) trend.head - trend.last else 0.0)
-      }
-      .toDF("site", "trend_drop")
+    val trendRows = SiteLane(series, (r: (Long, Double, Double)) => r._1, col("t")) { (siteId, it) =>
+      val rows = it.toArray
+      val (trend, _) = graft.solvers.Kernels.pvproDecompose(rows.map(_._3), rows.map(_._2))
+      Iterator.single((siteId, if (trend.nonEmpty) trend.head - trend.last else 0.0))
+    }.toDF("site", "trend_drop")
     println("[demo] PVPro monotone trend drop per site:")
     trendRows.orderBy("site").show()
     spark.stop()

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Energy-preserving dilation: re-sample each day's signal onto a
   * fixed sunrise→sunset grid (reference
@@ -139,6 +139,46 @@ object Dilation {
       dilated: DataFrame,
       riseSet: DataFrame,
       outSlots: Int
+  ): DataFrame =
+    undilateN(spark, dilated, riseSet, outSlots, Seq("dil_value"))
+      .select(col("site"), col("day"), col("out_slot"), col("values")(0).as("value"))
+
+  /** [[undilate]] over TWO value columns of the same dilated grain in
+    * ONE pass — (site, day, dil_slot, v1, v2) → (site, day, out_slot,
+    * value_1, value_2). Each output column is bit-identical to a
+    * separate undilate of that column. Exists because
+    * [[graft.DataHandler.scsfPerformanceIndex]] undilates the measured
+    * and fitted columns of ONE frame: two separate undilate passes
+    * re-execute the whole solver-priced fit subtree (Spark reuses the
+    * solver lane's shuffle, not its post-shuffle IRLS stage) and pay a
+    * (site, day) join to re-align what was never apart — measured
+    * optimization round 13 (same-JVM interleaved A/B at sf0.1,
+    * 40 bins → 288 slots, ProbeTau in git history): 4.6–4.7 s →
+    * 3.7–4.1 s warm.
+    */
+  def undilate2(
+      spark: SparkSession,
+      dilated: DataFrame,
+      riseSet: DataFrame,
+      outSlots: Int
+  ): DataFrame = {
+    val cols = dilated.columns
+    require(cols.length == 5,
+      s"undilate2 expects (site, day, dil_slot, v1, v2), got ${cols.mkString(", ")}")
+    undilateN(spark, dilated, riseSet, outSlots, Seq(cols(3), cols(4)))
+      .select(col("site"), col("day"), col("out_slot"),
+        col("values")(0).as("value_1"), col("values")(1).as("value_2"))
+  }
+
+  /** The per-(site, day) undilate pass over `valueCols`, one
+    * accumulator per column: (site, day, out_slot, values).
+    */
+  private def undilateN(
+      spark: SparkSession,
+      dilated: DataFrame,
+      riseSet: DataFrame,
+      outSlots: Int,
+      valueCols: Seq[String]
   ): DataFrame = {
     import spark.implicits._
     // riseSet is (site, day)-grain — route it through the engine's
@@ -147,19 +187,20 @@ object Dilation {
     val joined = SideJoin.back(dilated, riseSet, Seq("site", "day"))
       .select(
         col("site").cast("long"), col("day").cast("string"),
-        col("dil_slot").cast("int"), col("dil_value").cast("double"),
+        col("dil_slot").cast("int"), array(valueCols.map(col(_).cast("double")): _*),
         col("rise_h").cast("double"), col("set_h").cast("double")
       )
-      .as[(Long, String, Int, Double, Double, Double)]
+      .as[(Long, String, Int, Array[Double], Double, Double)]
     joined
       .groupByKey(r => (r._1, r._2))
-      .flatMapGroups { (key: (Long, String), it: Iterator[(Long, String, Int, Double, Double, Double)]) =>
+      .flatMapGroups { (key: (Long, String), it: Iterator[(Long, String, Int, Array[Double], Double, Double)]) =>
         val (siteId, day) = key
         val bins = it.toArray.sortBy(_._3)
         if (bins.isEmpty) Iterator.empty
         else {
           val rise = bins.head._5
           val set = bins.head._6
+          val nV = valueCols.length
           // the grid size comes from the MAX dil_slot, and each bin is
           // positioned by its OWN dil_slot — a frame with a dropped or
           // filtered slot must leave a hole, not silently shift every
@@ -179,79 +220,10 @@ object Dilation {
           // caught ±1-micro flips from exactly this). Consecutive out
           // slots also share their boundary double exactly, so the
           // per-day integral partitions without gap or overlap.
-          def integral(a: Double, b: Double): Double = {
-            var s = 0.0
-            var i = 0
-            while (i < bins.length) {
-              val g0 = rise + bins(i)._3 * dg
-              val g1 = rise + (bins(i)._3 + 1) * dg
-              val lo = math.max(a, g0)
-              val hi = math.min(b, g1)
-              if (hi > lo) s += bins(i)._4 * (hi - lo)
-              i += 1
-            }
-            s
-          }
           (0 until outSlots).iterator.map { k =>
             val a = rise + k * dh
             val b = rise + (k + 1) * dh
-            (siteId, day, k, integral(a, b) / dh)
-          }
-        }
-      }
-      .toDF("site", "day", "out_slot", "value")
-  }
-
-  /** [[undilate]] over TWO value columns of the same dilated grain in
-    * ONE pass — (site, day, dil_slot, v1, v2) → (site, day, out_slot,
-    * value_1, value_2). Per-column arithmetic is identical to
-    * [[undilate]] (same direct-product edges, same accumulation
-    * order), so each output column is bit-identical to a separate
-    * undilate of that column. Exists because
-    * [[graft.DataHandler.scsfPerformanceIndex]] undilates the measured
-    * and fitted columns of ONE frame: two separate undilate passes
-    * re-execute the whole solver-priced fit subtree (Spark reuses the
-    * solver lane's shuffle, not its post-shuffle IRLS stage) and pay a
-    * (site, day) join to re-align what was never apart — measured
-    * optimization round 13 (same-JVM interleaved A/B at sf0.1,
-    * 40 bins → 288 slots, ProbeTau in git history): 4.6–4.7 s →
-    * 3.7–4.1 s warm.
-    */
-  def undilate2(
-      spark: SparkSession,
-      dilated: DataFrame,
-      riseSet: DataFrame,
-      outSlots: Int
-  ): DataFrame = {
-    import spark.implicits._
-    val cols = dilated.columns
-    require(cols.length == 5,
-      s"undilate2 expects (site, day, dil_slot, v1, v2), got ${cols.mkString(", ")}")
-    val joined = SideJoin.back(dilated, riseSet, Seq("site", "day"))
-      .select(
-        col("site").cast("long"), col("day").cast("string"),
-        col("dil_slot").cast("int"),
-        col(cols(3)).cast("double"), col(cols(4)).cast("double"),
-        col("rise_h").cast("double"), col("set_h").cast("double")
-      )
-      .as[(Long, String, Int, Double, Double, Double, Double)]
-    joined
-      .groupByKey(r => (r._1, r._2))
-      .flatMapGroups { (key: (Long, String), it: Iterator[(Long, String, Int, Double, Double, Double, Double)]) =>
-        val (siteId, day) = key
-        val bins = it.toArray.sortBy(_._3)
-        if (bins.isEmpty) Iterator.empty
-        else {
-          val rise = bins.head._6
-          val set = bins.head._7
-          val nBins = bins.last._3 + 1
-          val dg = (set - rise) / nBins
-          val dh = (set - rise) / outSlots
-          // direct-product edges, one independent accumulator per
-          // column — see [[undilate]]'s edge-rounding contract
-          def integral2(a: Double, b: Double): (Double, Double) = {
-            var s1 = 0.0
-            var s2 = 0.0
+            val s = new Array[Double](nV)
             var i = 0
             while (i < bins.length) {
               val g0 = rise + bins(i)._3 * dg
@@ -260,21 +232,15 @@ object Dilation {
               val hi = math.min(b, g1)
               if (hi > lo) {
                 val wdt = hi - lo
-                s1 += bins(i)._4 * wdt
-                s2 += bins(i)._5 * wdt
+                var j = 0
+                while (j < nV) { s(j) += bins(i)._4(j) * wdt; j += 1 }
               }
               i += 1
             }
-            (s1, s2)
-          }
-          (0 until outSlots).iterator.map { k =>
-            val a = rise + k * dh
-            val b = rise + (k + 1) * dh
-            val (s1, s2) = integral2(a, b)
-            (siteId, day, k, s1 / dh, s2 / dh)
+            (siteId, day, k, s.map(_ / dh))
           }
         }
       }
-      .toDF("site", "day", "out_slot", "value_1", "value_2")
+      .toDF("site", "day", "out_slot", "values")
   }
 }

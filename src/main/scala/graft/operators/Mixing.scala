@@ -271,6 +271,35 @@ object Mixing {
     decided.unionByName(boundary).unionByName(nullRows)
   }
 
+  /** Greedy sequence packing: order documents by `(idHash, id)`
+    * within a hash shard, then fill context windows of `budget`
+    * tokens first-come — a new pack starts when the next document
+    * would overflow (an oversize document gets a pack of its own).
+    *
+    * Packing is inherently sequential, so the parallel unit is the
+    * SHARD: documents hash-partition into `nShards` independent
+    * streams, each packed in one pass of bounded arithmetic. At
+    * cluster scale `nShards` tracks total cores (thousands of
+    * shards), each shard's pack stream writes independently, and the
+    * hash order makes the result identical across any partitioning —
+    * unlike the "sort by length then zip" packers whose output
+    * depends on global sort stability.
+    *
+    * [[packGreedy2]] with a second budget that never binds.
+    *
+    * @return (id, shard, pack_id, tok) — pack_id is per-shard,
+    *   1-based, in hash order
+    */
+  def packGreedy(
+      df: DataFrame,
+      idCol: String,
+      tokCol: Column,
+      budget: Long,
+      nShards: Int
+  ): DataFrame =
+    packGreedy2(df, idCol, tokCol, budget, lit(0L), Long.MaxValue, nShards)
+      .select(col("id"), col("shard"), col("pack_id"), col("tok_a").as("tok"))
+
   /** Dual-budget greedy packing for MULTIMODAL context windows (VLM
     * training assembles text tokens AND image patches into one
     * window, each with its own capacity): same hash-shard / hash-order
@@ -307,9 +336,12 @@ object Mixing {
         var pack = 1
         var accA = 0L
         var accB = 0L
-        // see packGreedy: membership is tracked separately from the
-        // accumulators so a zero-token opener can't admit an oversize
-        // successor
+        // "pack already has a member" must be tracked separately from
+        // the accumulators being > 0: a zero-token opener leaves them
+        // at 0, and the next oversize doc would otherwise join its
+        // pack and break the budget invariant (this is also exactly
+        // the oracle's semantics — its recursion checks overflow for
+        // every non-first doc unconditionally)
         var started = false
         docs.iterator.map { case (id, ta, tb, _, _) =>
           if (started && (accA + ta > budgetA || accB + tb > budgetB)) {
@@ -322,64 +354,6 @@ object Mixing {
         }
       }
       .toDF("id", "shard", "pack_id", "tok_a", "tok_b")
-  }
-
-  /** Greedy sequence packing: order documents by `(idHash, id)`
-    * within a hash shard, then fill context windows of `budget`
-    * tokens first-come — a new pack starts when the next document
-    * would overflow (an oversize document gets a pack of its own).
-    *
-    * Packing is inherently sequential, so the parallel unit is the
-    * SHARD: documents hash-partition into `nShards` independent
-    * streams, each packed in one pass of bounded arithmetic. At
-    * cluster scale `nShards` tracks total cores (thousands of
-    * shards), each shard's pack stream writes independently, and the
-    * hash order makes the result identical across any partitioning —
-    * unlike the "sort by length then zip" packers whose output
-    * depends on global sort stability.
-    *
-    * @return (id, shard, pack_id, tok) — pack_id is per-shard,
-    *   1-based, in hash order
-    */
-  def packGreedy(
-      df: DataFrame,
-      idCol: String,
-      tokCol: Column,
-      budget: Long,
-      nShards: Int
-  ): DataFrame = {
-    require(budget > 0 && nShards > 0,
-      s"packGreedy needs positive budget and shard count, got budget=$budget nShards=$nShards")
-    import df.sparkSession.implicits._
-    val rows = df
-      .select(
-        col(idCol).cast("long").as("id"),
-        tokCol.cast("long").as("tok"),
-        idHash(col(idCol)).as("h")
-      )
-      .withColumn("shard", pmod(col("h"), lit(nShards.toLong)).cast("int"))
-      .as[(Long, Long, Long, Int)]
-    rows
-      .groupByKey(_._4)
-      .flatMapGroups { (shard: Int, it: Iterator[(Long, Long, Long, Int)]) =>
-        val docs = it.toArray.sortBy(r => (r._3, r._1))
-        var pack = 1
-        var acc = 0L
-        // "pack already has a member" must be tracked separately from
-        // acc > 0: a zero-token opener leaves acc at 0, and the next
-        // oversize doc would otherwise join its pack and break the
-        // budget invariant (this is also exactly the oracle's
-        // semantics — its recursion checks overflow for every
-        // non-first doc unconditionally)
-        var started = false
-        docs.iterator.map { case (id, tok, _, _) =>
-          if (started && acc + tok > budget) { pack += 1; acc = 0L }
-          acc += tok
-          started = true
-          (id, shard, pack, tok)
-        }
-      }
-      .toDF("id", "shard", "pack_id", "tok")
   }
 
   /** Deterministic per-epoch shuffle key: md5 of `"id:epoch"`. Every

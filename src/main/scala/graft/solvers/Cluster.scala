@@ -3,8 +3,8 @@ package graft.solvers
 /** Small per-site model-selection kernels (SURVEY §2.9): DBSCAN on
   * day-score pairs, Huber IRLS regression, Gauss–Newton curve fit.
   * All O(num_days²) or better on bounded per-site state inside a
-  * per-site lane (`analyses.SiteLane` or a `mapGroups`) — never on the
-  * raw grain.
+  * per-site lane (`analyses.SiteLane`; a `groupByKey` only where the
+  * key is not an integral site id) — never on the raw grain.
   */
 object Cluster {
 

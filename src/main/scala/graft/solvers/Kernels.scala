@@ -9,9 +9,9 @@ package graft.solvers
   * MAE ≈ 1e-3).
   *
   * All kernels run driver-free on executors, one site at a time, in a
-  * per-site lane (`analyses.SiteLane`, or a catalog query's
-  * `groupByKey(...).mapGroups`); state is O(num_days), independent of
-  * raw data scale.
+  * per-site lane (`analyses.SiteLane`; a `groupByKey` only where the
+  * key is not an integral site id, DESIGN §2 rule 2); state is
+  * O(num_days), independent of raw data scale.
   */
 object Kernels {
 

@@ -3,8 +3,9 @@ package graft.solvers
 /** Small dense / banded linear algebra for the per-site solver
   * kernels (SURVEY §2.8). Everything here operates on bounded
   * per-site state (vectors of length ≈ num-days), runs on executors
-  * inside a per-site lane (`analyses.SiteLane` or a `mapGroups`), and
-  * has no native dependencies.
+  * inside a per-site lane (`analyses.SiteLane`; a `groupByKey` only
+  * where the key is not an integral site id), and has no native
+  * dependencies.
   */
 object Linalg {
 

@@ -460,7 +460,7 @@ object DocStream {
         (shard: Int, it: Iterator[(Long, Long, Int)], state: GroupState[(Long, Long, Boolean)]) =>
           // third element: the open pack already has a member — kept
           // separately from acc > 0 so a zero-token opener can't admit
-          // an oversize successor (see Mixing.packGreedy)
+          // an oversize successor (see Mixing.packGreedy2)
           var (pack, acc, started) = state.getOption.getOrElse((1L, 0L, false))
           val assigns = it.toArray.sortBy(_._1).map { case (id, tok, _) =>
             if (started && acc + tok > budget) { pack += 1; acc = 0L }

@@ -5,12 +5,14 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.analyses.{Pipeline, Profiler, Quantiles, SiteLane, SunriseSunset}
+import graft.analyses.{ClearDay, Pipeline, Profiler, Quantiles, Shade, SiteLane, SunriseSunset, TimeShift}
 import graft.operators.DayStats
 import graft.solvers.Kernels
+import graft.sources.Synth
 
-/** Focused pins for the per-site solver lane ([[SiteLane]] and its
-  * DilRow use in Quantiles) and the fused two-pass orientationCells
+/** Focused pins for the per-site solver lane ([[SiteLane]], its
+  * DilRow use in Quantiles, the parallelism and bit-pinned outputs of
+  * the solves that run in it) and the fused two-pass orientationCells
   * derivation (Profiler). Each asserts the rewritten
   * interior against an INDEPENDENT derivation of the same contract —
   * kernel ground truth for the lane, hand aggregation for the cells —
@@ -142,6 +144,68 @@ class SolverLaneSpec extends AnyFunSuite {
       val c = JobCounter.during(spark, name)(build().queryExecution.optimizedPlan)
       assert(c.jobs == 0, s"building $name started ${c.jobs} jobs")
     }
+  }
+
+  /** A single-partition fleet of `nSites`, with site 1's clock one
+    * hour fast from day 20: one partition fixes every upstream float
+    * sum's order, so lane outputs are bit-stable across core counts.
+    */
+  private def shiftedFleet(nSites: Int): DataFrame = {
+    val fleet = Synth.pvFleet(spark, nSites, nDays = 40, slotsPerDay = 24, capStep = 0).coalesce(1)
+    fleet.withColumn("ts",
+      when(col("site") === 1 && col("day") >= 20, col("ts") + expr("INTERVAL 1 HOUR")).otherwise(col("ts")))
+  }
+
+  /** (site, dil_slot, med_v) mean day profiles and a fixed 2-vector basis. */
+  private def profiles(fleet: DataFrame): DataFrame =
+    fleet.groupBy(col("site"), col("slot").as("dil_slot")).agg(avg(col("power")).as("med_v"))
+  private val basis = Seq(
+    Array.tabulate(24)(i => math.max(0.0, math.sin(math.Pi * (i - 6) / 12.0))),
+    Array.tabulate(24)(i => math.cos(math.Pi * i / 12.0)))
+
+  /** The per-site solves that moved onto the lane, over `fleet`. */
+  private def laneSolves(fleet: DataFrame): Seq[(String, DataFrame)] = Seq(
+    "TimeShift.detect" -> TimeShift.detect(spark, fleet, "site", "ts", "power", slotsPerDay = 24),
+    "TimeShift.components" -> TimeShift.components(spark, fleet, "site", "ts", "power"),
+    "ClearDay.detect" -> ClearDay.detect(spark, fleet, "site", "ts", "power", slotsPerDay = 24),
+    "Shade.projectOnBasis" -> Shade.projectOnBasis(spark, profiles(fleet), basis))
+
+  test("per-site solves run in defaultParallelism lane tasks with no MapGroups node") {
+    // AQE coalesces a groupByKey shuffle of this byte-tiny input to
+    // ONE task; the lane's shuffle keeps defaultParallelism tasks
+    val par = spark.sparkContext.defaultParallelism
+    val solves = laneSolves(shiftedFleet(2 * par))
+    // (widest stage's task count, plans a MapGroups) per solve
+    val got = solves.map { case (name, df) =>
+      val c = JobCounter.during(spark, name)(df.collect())
+      name -> (c.maxTasks, df.queryExecution.executedPlan.toString.contains("MapGroups"))
+    }
+    assert(got == solves.map(_._1 -> (par, false)))
+  }
+
+  /** FNV-1a over every field in (site, second column) order: doubles
+    * by their raw IEEE-754 bits, strings by their hash.
+    */
+  private def digest(df: DataFrame): String = {
+    var h = 0xcbf29ce484222325L
+    def mix(x: Long): Unit = { h ^= x; h *= 0x100000001b3L }
+    df.orderBy(col(df.columns(0)), col(df.columns(1))).collect().foreach(_.toSeq.foreach {
+      case d: Double => mix(java.lang.Double.doubleToRawLongBits(d))
+      case s: String => mix(s.hashCode.toLong)
+      case b: Boolean => mix(if (b) 1L else 0L)
+      case n: java.lang.Number => mix(n.longValue)
+    })
+    f"$h%016x"
+  }
+
+  test("per-site solve outputs are bit-pinned") {
+    val pins = Map(
+      "TimeShift.detect" -> "ddb33ba1ed9bf62d",
+      "TimeShift.components" -> "4de879b1b1e1ac4a",
+      "ClearDay.detect" -> "e041ca5d3647385f",
+      "Shade.projectOnBasis" -> "0d8077e47c7516bf")
+    val got = laneSolves(shiftedFleet(4)).map { case (name, df) => name -> digest(df) }.toMap
+    assert(got == pins)
   }
 
   test("fused orientationCells: cells = max(v)/p99 and rise/set re-aggregate exactly") {
